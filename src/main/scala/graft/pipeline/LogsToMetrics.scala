@@ -15,23 +15,38 @@ import org.apache.spark.sql.types._
   *  - **Single scan, single shuffle.** Instead of the reference's
   *    per-element Python loop over configs (pipeline.py:168-178) or a
   *    unionByName of N filtered branches (which re-scans the source N
-  *    times), each row builds an array of per-config structs, keeps only
-  *    matching configs, and explodes. One pass over 100 TB, one
-  *    hash-partial aggregation before the only exchange — Beam's combiner
-  *    lifting ≡ Spark partial+final HashAggregate.
+  *    times), each row explodes the ids of the definitions it matches: one
+  *    `array<int>` of `CASE WHEN pred_i THEN i END`, nulls dropped, where
+  *    `pred_i` tests definition i's bits in a word holding every distinct
+  *    filter condition's result for the row. The aggregation groups by
+  *    (definition family id, window, dynamic label values); one
+  *    hash-partial aggregation runs before the only exchange — Beam's
+  *    combiner lifting ≡ Spark partial+final HashAggregate.
+  *  - Everything a definition fixes at plan time (window size, kind,
+  *    percentile gating, metric name, label keys, static labels) is read
+  *    from literal arrays indexed by id, so the name and static labels are
+  *    attached after the aggregation and never cross the shuffle or sit in
+  *    streaming state. Per-row work is one CASE over the DISTINCT dynamic
+  *    label field lists and value expressions, not over the N definitions.
+  *  - Why ids and not per-definition structs: an `explode(filter(array(N
+  *    structs), _ IS NOT NULL))` fan-out puts `ArrayFilter`, a
+  *    `CodegenFallback` higher-order function, under the `Generate`; the
+  *    generator then leaves whole-stage codegen and the interpreted
+  *    `ExplodeBase.eval` re-derives `CreateArray.dataType` (type coercion
+  *    over all N struct types) on every row — over half of all CPU time on
+  *    64 definitions. Keep lambdas out of this plan.
   *  - A disjunction of all config predicates is applied *before* the
   *    explode so non-matching rows never reach the generator; Catalyst
-  *    pushes it into the parquet scan.
+  *    pushes it into the parquet scan. (Not on the streaming path: see
+  *    [[graft.streaming.StreamingMetrics]].)
   *  - Window assignment is the reference's epoch-floor math
   *    (pipeline.py:67-70): `start = ts - (ts mod size)`, here in integer
   *    microseconds, supporting a different window size per config in the
   *    same single pass (Spark's `window()` needs a static size; this
   *    formulation doesn't).
-  *  - Labels are canonicalized at *plan time* to a key-sorted
-  *    `array<struct<key,value>>` (the reference sorts label tuples at
-  *    runtime per element, pipeline.py:172); arrays of structs are
-  *    orderable, so they group directly — no runtime canonicalization,
-  *    no map-grouping limitation.
+  *  - Labels are canonicalized at *plan time*: keys are sorted once per
+  *    definition family (the reference sorts label tuples at runtime per
+  *    element, pipeline.py:172) and the output map is built in key order.
   *
   * Value semantics (pipeline.py:200-208): COUNT ⇒ 1.0 per row; SUM ⇒
   * `float(msg.get(field, 0))`, missing field ⇒ 0. Divergence (documented,
@@ -43,8 +58,6 @@ import org.apache.spark.sql.types._
   *  labels map<string,string>, value double`.
   */
 object LogsToMetrics {
-
-  private val LabelsType = "array<struct<key:string,value:string>>"
 
   /** Field access strategy: typed columns vs schemaless string map. */
   sealed trait Mode {
@@ -96,81 +109,204 @@ object LogsToMetrics {
     def numValue(field: String): Column = f(field).try_cast(DoubleType)
   }
 
-  /** The shared multi-config fan-out: keep rows matching ANY config (the OR
-    * gate is pushdown-friendly), emit one struct per matching config,
-    * explode. Used by both the batch transform and StreamingMetrics so the
-    * fan-out semantics (null-pred handling, label canonicalization, value
-    * projection) live in exactly one place.
-    * Output: `_ts` + the per-config struct fields (+ `wsize` if requested).
+  /** The fan-out shared by the batch transform and StreamingMetrics, so its
+    * semantics (null-pred handling, label canonicalization, value
+    * projection, merging) live in exactly one place.
+    *
+    * With `epochWindows` (the batch transform) each row's tumbling window
+    * start `_wstart` is computed here, in its definition's window size;
+    * otherwise the caller windows the event time `_ts` (streaming).
+    *
+    * Definitions with equal (name, kind, sorted label keys, and window
+    * size when `epochWindows`) form one *family*: their points merge, as
+    * they would under the reference's (metric, labels, window) key. A label
+    * key that every member fixes to the same static value is a family
+    * constant, attached after the aggregation; every other key (dynamic,
+    * or static with different values across members) is a per-row value
+    * `_l0`, `_l1`, … in key order.
     */
-  private[graft] def fanOutExplode(
-      df: DataFrame,
-      defs: Seq[MetricDefinition],
-      mode: Mode,
-      tsCol: String,
-      withWsize: Boolean): DataFrame = {
+  private[graft] final class FanOut(defs: Seq[MetricDefinition], mode: Mode, epochWindows: Boolean) {
     require(defs.nonEmpty, "at least one metric definition")
-    val pp = pctlPlan(defs)
-    val perConfig: Seq[Column] = defs.map { d =>
-      val fields =
-        Seq(lit(d.name).as("metric")) ++
-          (if (withWsize) Seq(lit(d.effectiveWindowSizeSec).as("wsize")) else Nil) ++
-          Seq(
-            lit(aggKind(d.metricType)).as("kind"),
-            labelEntries(d, mode).as("labels"),
-            valueCol(d, mode).as("value")) ++
-          // pval/pval_a: buffered ONLY by their percentile aggregate — null
-          // for every other config, so those groups buffer nothing
-          (if (pp.withExact) Seq((d.metricType match {
-            case MetricType.P50(_) => valueCol(d, mode)
-            case _                 => lit(null).cast(DoubleType)
-          }).as("pval")) else Nil) ++
-          (if (pp.approxAccuracy.nonEmpty) Seq((d.metricType match {
-            case MetricType.P50Approx(_, _) => valueCol(d, mode)
-            case _                          => lit(null).cast(DoubleType)
-          }).as("pval_a")) else Nil)
-      when(mode.pred(d.filters), struct(fields: _*))
+
+    private val pctl = pctlPlan(defs)
+
+    /** Every partial aggregate of the shared pass; `value` picks one. */
+    val aggregates: Seq[Column] = aggValues(pctl)
+
+    /** Sorted label entries per definition: Left(static value) or
+      * Right(message field); dynamic wins on a key conflict (pipeline.py:198).
+      */
+    private val labelSpecs: Seq[Seq[(String, Either[String, String])]] = defs.map { d =>
+      (d.effectiveStaticLabels.toSeq.map { case (k, v) => k -> Left(v) } ++
+        d.dynamicLabels.toSeq.map { case (k, f) => k -> Right(f) }).sortBy(_._1)
     }
-    val anyMatch = defs.map(d => mode.pred(d.filters)).reduce(_ || _)
-    // Accept TIMESTAMP_NTZ event-time columns too (DuckDB/pandas-written
-    // parquet carries NTZ): under the engine's fixed UTC session timezone
-    // the cast is the identity instant, and unix_micros downstream
-    // requires the LTZ type.
-    val tsAsLtz = df.schema.fields.find(_.name == tsCol).map(_.dataType.typeName) match {
-      case Some("timestamp_ntz") => col(tsCol).cast("timestamp")
-      case _                     => col(tsCol)
+    private val familyKeys = defs.zip(labelSpecs).map { case (d, ls) =>
+      (d.name, aggKind(d.metricType), ls.map(_._1),
+        if (epochWindows) d.effectiveWindowSizeSec else 0L)
     }
-    df.filter(anyMatch)
-      .select(tsAsLtz.as("_ts"),
-        explode(filter(array(perConfig: _*), c => c.isNotNull)).as("m"))
-      .select(col("_ts"), col("m.*"))
+    private val families = familyKeys.distinct
+    private val familyOf: Seq[Int] = familyKeys.map(families.zipWithIndex.toMap)
+    private val representative: Seq[Int] = families.indices.map(familyOf.indexOf)
+
+    /** Per family, per sorted key: Some(value) when every member fixes the
+      * key to that one static value.
+      */
+    private val constants: Seq[Seq[Option[String]]] = families.indices.map { f =>
+      val specs = defs.indices.filter(familyOf(_) == f).map(labelSpecs)
+      specs.head.indices.map { p =>
+        specs.map(_(p)._2).distinct match {
+          case Seq(Left(v)) => Some(v)
+          case _            => None
+        }
+      }
+    }
+
+    /** Per definition: the expressions of its family's per-row label keys. */
+    private val rowLabels: Seq[Seq[Column]] = defs.indices.map { i =>
+      labelSpecs(i).zip(constants(familyOf(i))).collect { case ((_, src), None) =>
+        src.fold(v => lit(v), mode.labelValue)
+      }
+    }
+    private val labelLists = rowLabels.distinct
+    private val labelWidth = labelLists.map(_.size).max
+    private val values = defs.map(valueCol(_, mode))
+    private val distinctValues = values.distinct
+
+    /** Aggregation keys, with `_wstart` when `epochWindows`. */
+    val keys: Seq[Column] = (if (epochWindows) Seq(col("_wstart")) else Nil) ++
+      (col("_f") +: (0 until labelWidth).map(j => col(s"_l$j")))
+
+    /** Keep rows matching ANY definition; pushdown-friendly. */
+    def anyMatch: Column = disjunction(defs.map(_.filters).distinct)
+
+    /** OR of conjunctions, factored by shared leading conditions: the gate
+      * is compiled into the same generated method as the condition bits,
+      * and unfactored it alone nears HotSpot's JIT limit at 64 definitions.
+      */
+    private def disjunction(conjs: Seq[Seq[FilterCondition]]): Column =
+      if (conjs.exists(_.isEmpty)) lit(true)
+      else conjs.map(_.head).distinct.map { c =>
+        val rest = conjs.filter(_.head == c).map(_.tail)
+        if (rest.exists(_.isEmpty)) mode.pred(Seq(c)) else mode.pred(Seq(c)) && disjunction(rest)
+      }.reduce(_ || _)
+
+    /** One row per (input row, matching definition): `_wstart` (epoch
+      * micros) or `_ts` (a timestamp), `_f`, the per-row label values,
+      * `value` and the percentile inputs.
+      */
+    def rows(df: DataFrame, tsCol: String): DataFrame = {
+      // Accept TIMESTAMP_NTZ event-time columns too (DuckDB/pandas-written
+      // parquet carries NTZ): under the engine's fixed UTC session timezone
+      // the cast is the identity instant, and unix_micros downstream
+      // requires the LTZ type.
+      val ts = df.schema.fields.find(_.name == tsCol).map(_.dataType.typeName) match {
+        case Some("timestamp_ntz") => col(tsCol).cast("timestamp")
+        case _                     => col(tsCol)
+      }
+      // Each distinct condition is evaluated once per row, into one bit of
+      // a 63-bit word `_m<w>`; a definition matches when all its bits are
+      // set. The generated code per definition is then a mask test, not
+      // its predicates: with predicates inline, 64 definitions compile to
+      // a method over HotSpot's 8000-byte JIT limit, run interpreted.
+      val conds = defs.flatMap(_.filters).distinct
+      val bit = conds.zipWithIndex.map { case (c, j) => c -> (j / 63, 1L << (j % 63)) }.toMap
+      val words = conds.grouped(63).zipWithIndex.map { case (cs, w) =>
+        cs.map(c => when(mode.pred(Seq(c)), bit(c)._2).otherwise(0L)).reduce(_ bitwiseOR _).as(s"_m$w")
+      }.toSeq
+      val ids = defs.indices.map { i =>
+        val masks = defs(i).filters.map(bit).groupMapReduce(_._1)(_._2)(_ | _)
+        val hit = masks.map { case (w, m) => (col(s"_m$w") bitwiseAND m) === m }.reduceOption(_ && _)
+        hit.fold(lit(i))(when(_, lit(i)))
+      }
+      val d = col("_d")
+      val listOf = at(rowLabels.map(labelLists.indexOf), d)
+      val value = pick(at(values.map(distinctValues.indexOf), d), distinctValues.map(Some(_)))
+      // pval/pval_a: buffered ONLY by their percentile aggregate — null
+      // for every other definition, so those groups buffer nothing
+      val kind = at(defs.map(x => aggKind(x.metricType)), d)
+      val pvals =
+        (if (pctl.withExact) Seq(when(kind === 4, value).as("pval")) else Nil) ++
+          (if (pctl.approxAccuracy.nonEmpty) Seq(when(kind === 5, value).as("pval_a")) else Nil)
+      val time =
+        if (epochWindows) {
+          // epoch-floor tumbling window in integer micros; per-definition size
+          val micros = unix_micros(ts)
+          micros - pmod(micros, at(familyOf.map(windowMicrosOf), d))
+        } else ts
+      df.select(col("*") +: words: _*)
+        .select(col("*"), explode(array(ids: _*)).as("_d"))
+        .filter(d.isNotNull)
+        .select(Seq(time.as(if (epochWindows) "_wstart" else "_ts"), at(familyOf, d).as("_f"),
+          value.as("value")) ++
+          (0 until labelWidth).map(j => pick(listOf, labelLists.map(_.lift(j))).as(s"_l$j")) ++
+          pvals: _*)
+    }
+
+    /** Plan-time facts of the family in `_f`, read after the aggregation. */
+    def metric: Column = at(representative.map(defs(_).name), col("_f"))
+    def windowMicros: Column = at(families.indices.map(windowMicrosOf), col("_f"))
+    private def windowMicrosOf(f: Int): Long = defs(representative(f)).effectiveWindowSizeSec * 1000000L
+    def value: Column = finalValue(pctl, at(representative.map(i => aggKind(defs(i).metricType)), col("_f")))
+
+    /** The family's label map in key order: constants from a literal array,
+      * per-row keys from `_l0`, `_l1`, …; one map shape per distinct layout.
+      */
+    def labels: Column = {
+      val layouts: Seq[Seq[(String, Either[Int, Int])]] = families.indices.map { f =>
+        val keys = labelSpecs(representative(f)).map(_._1)
+        val isConst = constants(f).map(_.isDefined)
+        val slot = isConst.indices.map(p => isConst.take(p).count(_ == isConst(p)))
+        keys.indices.map(p => keys(p) -> (if (isConst(p)) Left(slot(p)) else Right(slot(p))))
+      }
+      val shapes = layouts.distinct
+      val consts = at(constants.map(_.flatten.toArray), col("_f"))
+      val maps = shapes.map { shape =>
+        if (shape.isEmpty) map().cast("map<string,string>")
+        else map(shape.flatMap { case (k, slot) =>
+          Seq(lit(k), slot.fold(c => consts.getItem(c), j => col(s"_l$j")))
+        }: _*)
+      }
+      pick(at(layouts.map(shapes.indexOf), col("_f")), maps.map(Some(_)))
+    }
+  }
+
+  /** `values(idx)` as a codegen'd element read of a literal array. */
+  private def at[T: scala.reflect.ClassTag](values: Seq[T], idx: Column): Column =
+    lit(values.toArray).getItem(idx)
+
+  /** `choices(key)`: the expression itself when there is one choice, else a
+    * CASE over the defined choices (null where none is defined).
+    */
+  private def pick(key: Column, choices: Seq[Option[Column]]): Column = choices match {
+    case Seq(Some(only)) => only
+    case _ =>
+      val branches = choices.zipWithIndex.collect { case (Some(c), k) => (k, c) }
+      branches.tail.foldLeft(when(key === branches.head._1, branches.head._2)) {
+        case (acc, (k, c)) => acc.when(key === k, c)
+      }
   }
 
   def apply(defs: Seq[MetricDefinition], mode: Mode, tsCol: String = "ts")(
       df: DataFrame): DataFrame = {
-    val pp = pctlPlan(defs)
-    val aggs = aggValues(pp)
-    fanOutExplode(df, defs, mode, tsCol, withWsize = true)
-      // epoch-floor tumbling window in integer micros; per-config size.
-      .withColumn("_wstart",
-        (expr("unix_micros(_ts)") - pmod(expr("unix_micros(_ts)"), col("wsize") * 1000000L)))
-      .groupBy(col("metric"), col("wsize"), col("kind"), col("_wstart"), col("labels"))
-      .agg(aggs.head, aggs.tail: _*)
+    val fo = new FanOut(defs, mode, epochWindows = true)
+    fo.rows(df.filter(fo.anyMatch), tsCol)
+      .groupBy(fo.keys: _*)
+      .agg(fo.aggregates.head, fo.aggregates.tail: _*)
       .select(
-        col("metric"),
+        fo.metric.as("metric"),
         timestamp_micros(col("_wstart")).as("window_start"),
-        timestamp_micros(col("_wstart") + col("wsize") * 1000000L).as("window_end"),
-        map_from_entries(col("labels")).as("labels"),
-        finalValue(pp).as("value"))
+        timestamp_micros(col("_wstart") + fo.windowMicros).as("window_end"),
+        fo.labels.as("labels"),
+        fo.value.as("value"))
   }
 
   /** Which percentile aggregates this fan-out needs: exact median and/or
     * approx median (at the MAX declared accuracy — a summary built at
     * higher accuracy satisfies every lower-accuracy request).
     */
-  final case class PctlPlan(withExact: Boolean, approxAccuracy: Option[Int])
+  private final case class PctlPlan(withExact: Boolean, approxAccuracy: Option[Int])
 
-  private[graft] def pctlPlan(defs: Seq[MetricDefinition]): PctlPlan = PctlPlan(
+  private def pctlPlan(defs: Seq[MetricDefinition]): PctlPlan = PctlPlan(
     withExact = defs.exists(_.metricType match {
       case MetricType.P50(_) => true
       case _ => false
@@ -184,7 +320,7 @@ object LogsToMetrics {
   /** 0 = sum-like (count is sum of 1s), 1 = min, 2 = max, 3 = avg,
     * 4 = p50 (exact), 5 = p50 (approx).
     */
-  private[graft] def aggKind(t: MetricType): Int = t match {
+  private def aggKind(t: MetricType): Int = t match {
     case MetricType.Count | MetricType.Sum(_) => 0
     case MetricType.Min(_)                    => 1
     case MetricType.Max(_)                    => 2
@@ -201,7 +337,7 @@ object LogsToMetrics {
     * HashAggregate to ObjectHashAggregate — count/sum-only fan-outs must
     * not pay that.
     */
-  private[graft] def aggValues(pp: PctlPlan): Seq[Column] = Seq(
+  private def aggValues(pp: PctlPlan): Seq[Column] = Seq(
     sum(col("value")).as("_sum"),
     min(col("value")).as("_min"),
     max(col("value")).as("_max"),
@@ -210,27 +346,16 @@ object LogsToMetrics {
     pp.approxAccuracy.map(acc =>
       percentile_approx(col("pval_a"), lit(0.5), lit(acc)).as("_p50a")).toSeq
 
-  private[graft] def finalValue(pp: PctlPlan): Column = {
-    var c = when(col("kind") === 0, col("_sum"))
-      .when(col("kind") === 1, col("_min"))
-      .when(col("kind") === 2, col("_max"))
-    if (pp.withExact) c = c.when(col("kind") === 4, col("_p50"))
-    if (pp.approxAccuracy.nonEmpty) c = c.when(col("kind") === 5, col("_p50a"))
+  private def finalValue(pp: PctlPlan, kind: Column): Column = {
+    var c = when(kind === 0, col("_sum"))
+      .when(kind === 1, col("_min"))
+      .when(kind === 2, col("_max"))
+    if (pp.withExact) c = c.when(kind === 4, col("_p50"))
+    if (pp.approxAccuracy.nonEmpty) c = c.when(kind === 5, col("_p50a"))
     c.otherwise(col("_sum") / col("_cnt")) // kind 3 = avg
   }
 
-  /** Plan-time canonical labels: static ∪ dynamic, dynamic wins on key
-    * conflict (pipeline.py:198), sorted by key (pipeline.py:172).
-    */
-  private[graft] def labelEntries(d: MetricDefinition, mode: Mode): Column = {
-    val entries: Seq[(String, Column)] =
-      (d.effectiveStaticLabels.view.mapValues(lit(_)).toSeq ++
-        d.dynamicLabels.view.mapValues(mode.labelValue).toSeq).sortBy(_._1)
-    if (entries.isEmpty) array().cast(LabelsType)
-    else array(entries.map { case (k, v) => struct(lit(k).as("key"), v.as("value")) }: _*)
-  }
-
-  private[graft] def valueCol(d: MetricDefinition, mode: Mode): Column = d.metricType match {
+  private def valueCol(d: MetricDefinition, mode: Mode): Column = d.metricType match {
     case MetricType.Count => lit(1.0)
     case MetricType.Sum(field) => mode.sumValue(field)
     case MetricType.Min(field) => mode.numValue(field)

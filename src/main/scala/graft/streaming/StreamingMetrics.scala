@@ -23,9 +23,13 @@ import org.apache.spark.sql.functions._
   * allowed lateness 0 — SURVEY.md §2.3); `watermarkDelay = "0 seconds"`
   * reproduces that, and is configurable for real deployments.
   *
-  * Scale: each query is scan → fan-out explode → partial agg → shuffle by
-  * (metric, labels, window) → stateful final agg; state per key-window is
-  * evicted at watermark — bounded by live windows × label cardinality.
+  * Scale: each query is scan → watermark → explode of the matching
+  * definition ids → partial agg → shuffle by (window, definition family
+  * id, dynamic label values) → stateful final agg. The metric name and
+  * static labels are attached from the family id after the aggregation,
+  * so they stay out of the shuffle and the state key; state per
+  * key-window is evicted at watermark — bounded by live windows × label
+  * cardinality.
   */
 object StreamingMetrics {
 
@@ -91,10 +95,16 @@ object StreamingMetrics {
   }
 
   /** Shared shape for every window kind: one scan, one shuffle, N configs.
-    * The fan-out itself is LogsToMetrics.fanOutExplode — identical
-    * semantics to the batch path by construction; `winFn` supplies the
+    * The fan-out itself is LogsToMetrics.FanOut — identical semantics to
+    * the batch path by construction; `winFn` supplies the
     * tumbling/sliding/session grouping column over the fanned-out
     * event-time.
+    *
+    * No OR gate here: Spark pushes a deterministic filter that does not
+    * read the event-time column below `EventTimeWatermark`, so a gated row
+    * that matches no definition would never advance the watermark and a
+    * quiet metric's window would stay open. Such a row explodes to no
+    * definition id instead, above the watermark.
     */
   private def attachWindowed(
       stream: DataFrame,
@@ -103,29 +113,22 @@ object StreamingMetrics {
       tsCol: String,
       watermarkDelay: String,
       winFn: Column => Column): DataFrame = {
-    val pp = LogsToMetrics.pctlPlan(defs)
-    val aggs = LogsToMetrics.aggValues(pp)
+    val fo = new LogsToMetrics.FanOut(defs, mode, epochWindows = false)
     // Normalize TIMESTAMP_NTZ BEFORE the watermark: Spark rejects NTZ
     // watermark columns outright ([EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE]),
-    // so fanOutExplode's own NTZ branch can never fire on this path.
+    // so the fan-out's own NTZ branch can never fire on this path.
     val tsNorm = stream.schema.fields.find(_.name == tsCol).map(_.dataType.typeName) match {
       case Some("timestamp_ntz") => stream.withColumn(tsCol, col(tsCol).cast("timestamp"))
       case _                     => stream
     }
-    LogsToMetrics
-      .fanOutExplode(
-        tsNorm.withWatermark(tsCol, watermarkDelay),
-        defs,
-        mode,
-        tsCol,
-        withWsize = false)
-      .groupBy(winFn(col("_ts")).as("window"), col("metric"), col("kind"), col("labels"))
-      .agg(aggs.head, aggs.tail: _*)
+    fo.rows(tsNorm.withWatermark(tsCol, watermarkDelay), tsCol)
+      .groupBy(winFn(col("_ts")).as("window") +: fo.keys: _*)
+      .agg(fo.aggregates.head, fo.aggregates.tail: _*)
       .select(
-        col("metric"),
+        fo.metric.as("metric"),
         col("window.start").as("window_start"),
         col("window.end").as("window_end"),
-        map_from_entries(col("labels")).as("labels"),
-        LogsToMetrics.finalValue(pp).as("value"))
+        fo.labels.as("labels"),
+        fo.value.as("value"))
   }
 }

@@ -189,8 +189,120 @@ class LogsToMetricsSpec extends SparkSpec {
     assert(loaded.schema("ts").dataType.typeName == "timestamp")
     assert(run(loaded) == run(ltz))
   }
+
+  test("fan-out ≡ union of N filtered single-definition aggregations (typed, NTZ, schemaless)") {
+    val severities = Seq("INFO", "WARN", "ERROR")
+    val services = Seq("api", "x", "db")
+    val users = Seq("u1", "u2", "u3", null)
+    val rts = Seq("12.5", "7", "bad", null, "30")
+    val rows = (0 until 400).map { i =>
+      (at(i * 37 % 200), severities(i % 3), services(i / 3 % 3), users(i % 4),
+        if (i % 11 == 0) None else Some((i * 13 % 90).toDouble), rts(i % 5))
+    }
+    val typed = rows.map { case (ts, sev, svc, user, bytes, rt) => Ev(ts, sev, svc, user, bytes, rt) }.toDF
+    val ntz = typed.withColumn("ts", to_timestamp_ntz(date_format($"ts", "yyyy-MM-dd HH:mm:ss")))
+    val schemaless = rows.map { case (ts, sev, svc, user, bytes, rt) =>
+      (ts, Seq("severity" -> sev, "service" -> svc, "user" -> user,
+        "bytes" -> bytes.map(b => f"$b%.0f").orNull, "rt" -> rt).filter(_._2 != null).toMap)
+    }.toDF("ts", "msg")
+
+    val kinds = Seq(MetricType.Count, MetricType.Sum("bytes"), MetricType.Min("rt"),
+      MetricType.Max("rt"), MetricType.Avg("bytes"), MetricType.P50("rt"),
+      MetricType.P50Approx("bytes"))
+    val shapes: Seq[(Map[String, String], Map[String, String])] = Seq(
+      (Map.empty, Map.empty),                                  // no labels
+      (Map("env" -> "t"), Map.empty),                          // static only
+      (Map("env" -> "t"), Map("user" -> "user")),              // shared shape …
+      (Map("env" -> "t"), Map("user" -> "user")),              // … twice
+      (Map("env" -> "prod", "team" -> "a"), Map("env" -> "service")), // dynamic overrides static
+      (Map.empty, Map("sev" -> "severity", "svc" -> "service")))
+    val filters = Seq(
+      Nil,
+      Seq(FilterCondition("severity", "ERROR", "equals")),
+      Seq(FilterCondition("bytes", "40", "greater_than"), FilterCondition("service", "x", "contains")),
+      Seq(FilterCondition("rt", "20", "less_than")),
+      Seq(FilterCondition("severity", "WARN", "equals")))
+    val defs = (0 until 70).map { i =>
+      val (static, dynamic) = shapes(i % shapes.size)
+      MetricDefinition(f"m$i%02d", kinds(i % kinds.size), filters(i % filters.size),
+        static, dynamic, if (i % 5 < 3) 10 else 60)
+    } ++ Seq(
+      // same name, window and labels: one merged point per window
+      MetricDefinition("dup", MetricType.Count, filters(1), Map("env" -> "t"), windowSizeSec = 60),
+      MetricDefinition("dup", MetricType.Count, Seq(FilterCondition("service", "api", "equals")),
+        Map("env" -> "t"), windowSizeSec = 60),
+      // same name, other kind: its own point
+      MetricDefinition("dup", MetricType.Sum("bytes"), Nil, Map("env" -> "t"), windowSizeSec = 60),
+      // one key, static in one definition and dynamic in the other
+      MetricDefinition("zone", MetricType.Count, Nil, Map("z" -> "x"), windowSizeSec = 60),
+      MetricDefinition("zone", MetricType.Count, Nil, dynamicLabels = Map("z" -> "service"),
+        windowSizeSec = 60),
+      MetricDefinition("zone", MetricType.Count, filters(1), Map("z" -> "other"), windowSizeSec = 60)) ++
+      // 70 more distinct conditions: the condition bits span two 63-bit words
+      (0 until 70).map(i => MetricDefinition(s"over$i", MetricType.Sum("bytes"),
+        Seq(FilterCondition("bytes", i.toString, "greater_than")), windowSizeSec = 60))
+
+    def points(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.select($"metric", $"window_start", $"window_end", $"labels", $"value").collect().toSeq
+        .map(r => (r.getString(0), r.getTimestamp(1).getTime, r.getTimestamp(2).getTime,
+          r.getMap[String, String](3).toSeq.sorted, r.get(4)).toString)
+        .sorted
+
+    for ((input, mode) <- Seq(
+        typed -> LogsToMetrics.Typed(typed.schema),
+        ntz -> LogsToMetrics.Typed(ntz.schema),
+        schemaless -> LogsToMetrics.Schemaless("msg"))) {
+      val got = points(LogsToMetrics(defs, mode)(input))
+      val want = points(reference(defs, mode, input))
+      assert(got.size > 1000, s"too few points to compare: ${got.size}")
+      assert(got == want, s"$mode: only fan-out ${got.diff(want).take(5)}, " +
+        s"only reference ${want.diff(got).take(5)}")
+      assert(got.exists(_.startsWith("(dup,")) && got.exists(p => p.startsWith("(zone,") &&
+        p.contains("List((z,x))")))
+    }
+  }
+
+  /** The obvious per-definition plan: each definition filtered and projected
+    * on its own, the results unioned, one aggregation over (name, kind,
+    * window, label set).
+    */
+  private def reference(defs: Seq[MetricDefinition], mode: LogsToMetrics.Mode,
+      df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val micros = unix_micros(col("ts").cast("timestamp"))
+    defs.map { d =>
+      val size = d.effectiveWindowSizeSec * 1000000L
+      val entries = (d.staticLabels.map { case (k, v) => k -> lit(v) } ++
+        d.dynamicLabels.map { case (k, f) => k -> mode.labelValue(f) }).toSeq.sortBy(_._1)
+      val labels =
+        if (entries.isEmpty) array().cast("array<struct<key:string,value:string>>")
+        else array(entries.map { case (k, v) => struct(lit(k).as("key"), v.as("value")) }: _*)
+      val (kind, value) = d.metricType match {
+        case MetricType.Count                  => ("sum", lit(1.0))
+        case MetricType.Sum(f)                 => ("sum", mode.sumValue(f))
+        case MetricType.Min(f)                 => ("min", mode.numValue(f))
+        case MetricType.Max(f)                 => ("max", mode.numValue(f))
+        case MetricType.Avg(f)                 => ("avg", mode.numValue(f))
+        case MetricType.P50(f)                 => ("p50", mode.numValue(f))
+        case MetricType.P50Approx(f, _)        => ("p50a", mode.numValue(f))
+      }
+      df.filter(mode.pred(d.filters)).select(lit(d.name).as("metric"), lit(kind).as("kind"),
+        lit(size).as("size"), (micros - pmod(micros, lit(size))).as("ws"), labels.as("labels"),
+        value.as("v"))
+    }.reduce(_ unionByName _)
+      .groupBy("metric", "kind", "size", "ws", "labels")
+      .agg(sum("v").as("sum"), min("v").as("min"), max("v").as("max"), avg("v").as("avg"),
+        percentile($"v", lit(0.5)).as("p50"), percentile_approx($"v", lit(0.5), lit(10000)).as("p50a"))
+      .select($"metric", timestamp_micros($"ws").as("window_start"),
+        timestamp_micros($"ws" + $"size").as("window_end"),
+        map_from_entries($"labels").as("labels"),
+        when($"kind" === "sum", $"sum").when($"kind" === "min", $"min")
+          .when($"kind" === "max", $"max").when($"kind" === "avg", $"avg")
+          .when($"kind" === "p50", $"p50").otherwise($"p50a").as("value"))
+  }
 }
 
 object LogsToMetricsSpec {
   final case class Row1(ts: java.sql.Timestamp, severity: String, bytes: Double)
+  final case class Ev(ts: java.sql.Timestamp, severity: String, service: String, user: String,
+      bytes: Option[Double], rt: String)
 }

@@ -30,6 +30,52 @@ class PlanSpec extends SparkSpec {
     assert(count(p, "Exchange hashpartitioning") == 1, s"exactly one data shuffle:\n$p")
   }
 
+  test("64-definition typed fan-out: Generate inside whole-stage codegen, no CodegenFallback") {
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+    import org.apache.spark.sql.execution.{GenerateExec, InputAdapter, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.functions._
+    import graft.model.{FilterCondition, MetricDefinition, MetricType}
+    import graft.pipeline.LogsToMetrics
+    def pickOf(values: Seq[String]) = element_at(typedLit(values), (col("id") % values.size + 1).cast("int"))
+    val df = spark.range(1000).select(
+      timestamp_seconds(col("id")).as("ts"),
+      pickOf(Seq("DEBUG", "INFO", "WARN", "ERROR")).as("severity"),
+      pickOf(Seq("api", "auth", "billing")).as("service"),
+      (col("id") * 7 % 600).as("status"),
+      (col("id") * 13 % 5000).as("bytes"),
+      (col("id") % 97 * 1.5).as("response_time"),
+      pickOf(Seq("u1", "u2", "u3")).as("user"),
+      pickOf(Seq("eu", "us")).as("region"),
+      pickOf(Seq("/a", "/b")).as("path"))
+    val defs = (0 until 64).map { i =>
+      val t = Seq(MetricType.Count, MetricType.Sum("bytes"), MetricType.Max("response_time"))(i % 3)
+      val dynamic = Seq(Map("user" -> "user"), Map("service" -> "service"), Map("region" -> "region"),
+        Map("path" -> "path", "service" -> "service"))(i / 2 % 4)
+      MetricDefinition(f"typed_$i%02d", t,
+        Seq(FilterCondition("severity", Seq("INFO", "WARN", "ERROR", "DEBUG")(i % 4), "equals"),
+          FilterCondition("status", (i % 4 * 100 + 199).toString, "greater_than")),
+        Map("env" -> "bench", "def" -> i.toString), dynamic, if (i % 2 == 0) 10 else 60)
+    }
+    val key = "spark.sql.adaptive.enabled"
+    val saved = spark.conf.get(key)
+    spark.conf.set(key, "false") // inspect the codegen stages without adaptive re-planning
+    val p: SparkPlan =
+      try LogsToMetrics(defs, LogsToMetrics.Typed(df.schema))(df).queryExecution.executedPlan
+      finally spark.conf.set(key, saved)
+    def stage(n: SparkPlan): Seq[SparkPlan] =
+      n +: (n match {
+        case _: InputAdapter => Nil
+        case _               => n.children.flatMap(stage)
+      })
+    assert(p.collect { case g: GenerateExec => g }.size == 1, s"one fan-out Generate:\n$p")
+    assert(p.collect { case w: WholeStageCodegenExec => w }
+      .exists(w => stage(w.child).exists(_.isInstanceOf[GenerateExec])),
+      s"the fan-out Generate must run inside a WholeStageCodegen stage:\n$p")
+    val fallbacks = p.collect { case n => n.expressions.flatMap(_.collect { case e: CodegenFallback => e }) }
+      .flatten
+    assert(fallbacks.isEmpty, s"interpreted expressions in the fan-out plan: $fallbacks")
+  }
+
   test("q_join_enrich: dimension side broadcasts, fact side stays unshuffled") {
     val p = plan("q_join_enrich")
     assert(p.contains("BroadcastHashJoin"), s"dim join must broadcast:\n$p")

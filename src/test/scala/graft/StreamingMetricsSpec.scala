@@ -137,6 +137,26 @@ class StreamingMetricsSpec extends SparkSpec {
     assert(batch == Set(("error_count", 60L, 2.0), ("bytes_sum", 60L, 350.0)))
   }
 
+  test("events matching no definition still advance the watermark and close windows") {
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[(java.sql.Timestamp, Array[Byte])]
+    val parsed = Ingest.parseSchemaless(mem.toDF.toDF("ts", "raw"), "raw")
+    val Seq(out) = StreamingMetrics.attach(parsed, defs.take(1), LogsToMetrics.Schemaless("msg"))
+    val q = out.writeStream.format("memory").queryName("quiet_close").outputMode("append").start()
+    try {
+      mem.addData((at(65), msg("ERROR", 1).getBytes("UTF-8")))
+      q.processAllAvailable()
+      // only an event that error_count filters out passes the window end
+      mem.addData((at(200), msg("INFO", 1).getBytes("UTF-8")))
+      q.processAllAvailable()
+      val emitted = spark.table("quiet_close")
+        .select($"metric", unix_timestamp($"window_start").as("ws"), $"value")
+        .as[(String, Long, Double)].collect().toSet
+      assert(emitted == Set(("error_count", 60L, 1.0)),
+        s"the non-matching event's time must close [60, 120): $emitted")
+    } finally q.stop()
+  }
+
   test("avg metric type aggregates correctly across micro-batches") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(java.sql.Timestamp, Array[Byte])]
