@@ -1,6 +1,5 @@
 package graft
 
-import graft.filter.FilterCompiler
 import graft.ingest.Ingest
 import graft.model._
 import graft.pipeline.LogsToMetrics
@@ -10,10 +9,10 @@ import org.apache.spark.sql.functions._
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
   * Every declared query routes through the graft engine APIs
-  * (FilterCompiler / LogsToMetrics / Ingest / ext modules) and pairs with a
-  * DuckDB oracle in [[oracleSql]]. Column names are aligned 1:1 between the
-  * Spark result and the oracle (driver compare sorts columns by name).
-  * Floating-point outputs are made order-insensitive: exact 2-decimal
+  * (LogsToMetrics and its field-access `Mode` / Ingest / ext modules) and
+  * pairs with a DuckDB oracle in [[oracleSql]]. Column names are aligned
+  * 1:1 between the Spark result and the oracle (driver compare sorts
+  * columns by name). Floating-point outputs are made order-insensitive: exact 2-decimal
   * inputs are summed as DECIMAL and cast back, or rounded where the engine
   * semantics mandate a double sum.
   */
@@ -32,7 +31,7 @@ object SparkEntry {
 
   private def filterCount(s: SparkSession, dir: String, conds: FilterCondition*): DataFrame = {
     val df = ev(s, dir)
-    df.filter(FilterCompiler.compile(conds, df.schema)).agg(count(lit(1)).as("cnt"))
+    df.filter(LogsToMetrics.Typed(df.schema).pred(conds)).agg(count(lit(1)).as("cnt"))
   }
 
 
@@ -55,7 +54,7 @@ object SparkEntry {
       graft.ext.GraphQueries.oracleSql ++ graft.ext.Bpe.oracleSql
 
   private def coreQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // O3 filter semantics (SURVEY.md §2.2), compiled by FilterCompiler
+    // O3 filter semantics (SURVEY.md §2.2), compiled by LogsToMetrics.Mode.pred
     "q_filter_equals" -> ((s, dir) =>
       filterCount(s, dir, FilterCondition("event_type", "error", "equals"))),
     "q_filter_contains" -> ((s, dir) =>

@@ -1,7 +1,9 @@
 package graft
 
+import graft.pipeline.LogsToMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Central loader for the driver-generated parquet tables under
   * /root/testdata/sf0.001|sf0.01|sf0.1 (see repo TESTDATA.md / FIXTURES.md).
@@ -18,14 +20,9 @@ object Tables {
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = spark.read.parquet(s"$sfDir/$name.parquet")
-    df.schema.fields.find(_.name == "ts").map(_.dataType.typeName) match {
-      case Some("long") => df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      // DuckDB/pandas-written parquet carries TIMESTAMP_NTZ; under the
-      // engine's fixed UTC session timezone the cast is the identity
-      // instant, and unix_micros/unix_timestamp paths need LTZ
-      case Some("timestamp_ntz") => df.withColumn("ts", col("ts").cast("timestamp"))
-      case _ => df
-    }
+    if (df.schema.fields.exists(f => f.name == "ts" && f.dataType == LongType))
+      df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
+    else LogsToMetrics.ltzEventTime(df, "ts")
   }
 
   def events(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "events")

@@ -18,6 +18,21 @@ package graft.model
   */
 final case class FilterCondition(field: String, value: String, operator: String) {
   require(field != null && field.nonEmpty, "filter condition requires a field")
+
+  /** `value` as the comparand of greater_than/less_than: Python's
+    * `float(value)`, whose failure means the condition never matches.
+    */
+  def number: Option[Double] =
+    Some(value.trim).filter(FilterCondition.DoubleLit.matches).flatMap(_.toDoubleOption)
+}
+
+object FilterCondition {
+  /** Decimal-literal grammar only: Scala's `toDouble` accepts Java suffix
+    * forms ("100d", "1.5f") that Python's float() rejects. (Remaining
+    * micro-divergences documented: Python also accepts underscore
+    * separators and inf/nan, which no sane config uses.)
+    */
+  private val DoubleLit = """[+-]?(\d+(\.\d*)?|\.\d+)([eE][+-]?\d+)?""".r
 }
 
 object FilterOps {

@@ -1,7 +1,6 @@
 package graft.pipeline
 
-import graft.filter.FilterCompiler
-import graft.model.{FilterCondition, MetricDefinition, MetricType}
+import graft.model.{FilterCondition, FilterOps, MetricDefinition, MetricType}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -59,55 +58,111 @@ import org.apache.spark.sql.types._
   */
 object LogsToMetrics {
 
-  /** Field access strategy: typed columns vs schemaless string map. */
+  /** Where a message field lives: typed columns or a schemaless string
+    * map. Each mode defines only [[field]]; the filter, the value and the
+    * labels all read through it, as the reference reads every field with
+    * `msg.get(field)` (filter.py:13-45, pipeline.py:188-208).
+    */
   sealed trait Mode {
-    def pred(conds: Seq[FilterCondition]): Column
-    def sumValue(field: String): Column
-    def labelValue(field: String): Column
 
-    /** Nullable numeric read (no missing⇒0 coalerce) — min/max/avg exclude
+    /** The field's column (null when missing) and its [[Mode.Kind]]. */
+    protected def field(name: String): (Column, Mode.Kind)
+
+    /** A conjunctive condition list as one Catalyst predicate — no UDFs,
+      * fully codegen-able, and pushdown-friendly (a predicate over parquet
+      * columns lands in `PushedFilters`).
+      *
+      * Semantics are locked to the reference evaluator (filter.py:13-45,
+      * verified against tests/test_filter.py:95-120):
+      *
+      *  - conjunction of all conditions; empty list ⇒ always true
+      *  - `equals`: string-typed runtime value compared to the config string;
+      *    a non-string runtime value never equals a config string ⇒ false
+      *  - `contains`: substring test, only defined on string values; else false
+      *  - `greater_than`/`less_than`: numeric runtime values only (numeric
+      *    *strings* do NOT match — Python `isinstance` guard; a boolean is a
+      *    number, as Python's `bool` subclasses `int`); config value parsed
+      *    as double ([[FilterCondition.number]]), unparsable config ⇒ false
+      *  - unknown operator ⇒ false; missing field / null ⇒ false
+      *
+      * Typed fields resolve every type guard at plan time (to `lit(false)`
+      * when the reference would always return False). A schemaless field is
+      * [[Mode.Loose]]: JSON numbers were stringified by the parse, so
+      * numeric comparisons `try_cast` the string; documented divergence from
+      * the reference: a JSON number compares `equals` via its canonical
+      * string rendering, and numeric-looking strings DO satisfy
+      * greater_than/less_than (the runtime type distinction is lost).
+      */
+    def pred(conds: Seq[FilterCondition]): Column =
+      conds.map { c =>
+        val (f, kind) = field(c.field)
+        (c.operator, kind) match {
+          case (FilterOps.Equals, Mode.Str | Mode.Loose)   => f === lit(c.value)
+          case (FilterOps.Contains, Mode.Str | Mode.Loose) => f.contains(c.value)
+          case (FilterOps.GreaterThan, Mode.Num | Mode.Loose) =>
+            c.number.fold(lit(false))(numValue(c.field) > _)
+          case (FilterOps.LessThan, Mode.Num | Mode.Loose) =>
+            c.number.fold(lit(false))(numValue(c.field) < _)
+          case _ => lit(false) // wrong type, missing field or unknown operator (filter.py:42)
+        }
+      }.reduceOption(_ && _).getOrElse(lit(true))
+
+    /** Nullable numeric read (no missing⇒0 coalesce) — min/max/avg exclude
       * missing/unparsable values instead of counting them as 0.
       */
-    def numValue(field: String): Column
+    def numValue(name: String): Column = field(name) match {
+      case (f, Mode.Num) => f.cast(DoubleType)
+      case (f, _)        => f.try_cast(DoubleType)
+    }
+
+    /** `float(msg.get(field, 0))`; unparsable ⇒ 0 instead of failing the job. */
+    def sumValue(name: String): Column = coalesce(numValue(name), lit(0.0))
+
+    /** `str(msg.get(field, ""))`. */
+    def labelValue(name: String): Column = coalesce(field(name)._1.cast(StringType), lit(""))
+  }
+
+  object Mode {
+    /** Missing, string, numeric (incl. boolean), any other typed column, or
+      * a schemaless map string: possibly absent, possibly a number.
+      */
+    sealed trait Kind
+    case object Missing extends Kind
+    case object Str extends Kind
+    case object Num extends Kind
+    case object Other extends Kind
+    case object Loose extends Kind
   }
 
   /** Records have a declared schema; field types known at plan time. */
   final case class Typed(schema: StructType) extends Mode {
-    def pred(conds: Seq[FilterCondition]): Column = FilterCompiler.compile(conds, schema)
-    def sumValue(field: String): Column =
-      schema.fields.find(_.name == field) match {
-        case None => lit(0.0) // msg.get(field, 0)
-        case Some(f) =>
-          f.dataType match {
-            case _: NumericType => coalesce(col(field).cast(DoubleType), lit(0.0))
-            case _              => coalesce(col(field).try_cast(DoubleType), lit(0.0))
-          }
-      }
-    def labelValue(field: String): Column =
-      if (schema.fieldNames.contains(field))
-        coalesce(col(field).cast(StringType), lit("")) // str(msg.get(field, ""))
-      else lit("")
-    def numValue(field: String): Column =
-      schema.fields.find(_.name == field) match {
-        case None => lit(null).cast(DoubleType)
-        case Some(f) =>
-          f.dataType match {
-            case _: NumericType => col(field).cast(DoubleType)
-            case _              => col(field).try_cast(DoubleType)
-          }
+    protected def field(name: String): (Column, Mode.Kind) =
+      schema.fields.find(_.name == name).map(_.dataType) match {
+        case None                               => (lit(null), Mode.Missing)
+        case Some(StringType)                   => (col(name), Mode.Str)
+        case Some(_: NumericType | BooleanType) => (col(name), Mode.Num)
+        case Some(_)                            => (col(name), Mode.Other)
       }
   }
 
   /** Records are a `MapType(String,String)` column parsed from JSON. */
   final case class Schemaless(msgCol: String) extends Mode {
-    private def f(field: String) = try_element_at(col(msgCol), lit(field))
-    def pred(conds: Seq[FilterCondition]): Column =
-      FilterCompiler.compileSchemaless(conds, col(msgCol))
-    def sumValue(field: String): Column =
-      coalesce(f(field).try_cast(DoubleType), lit(0.0))
-    def labelValue(field: String): Column = coalesce(f(field), lit(""))
-    def numValue(field: String): Column = f(field).try_cast(DoubleType)
+    // try_element_at, not element_at: ANSI mode (Spark 4 default) makes
+    // element_at throw on a missing map key; reference semantics are
+    // msg.get(field) ⇒ None.
+    protected def field(name: String): (Column, Mode.Kind) =
+      (try_element_at(col(msgCol), lit(name)), Mode.Loose)
   }
+
+  /** `df` with a TIMESTAMP_NTZ event-time column cast to TIMESTAMP.
+    * DuckDB/pandas-written parquet carries NTZ; under the engine's fixed
+    * UTC session timezone the cast is the identity instant, and both
+    * `unix_micros` and `withWatermark` require the LTZ type.
+    */
+  def ltzEventTime(df: DataFrame, tsCol: String): DataFrame =
+    if (df.schema.fields.exists(f => f.name == tsCol && f.dataType == TimestampNTZType))
+      df.withColumn(tsCol, col(tsCol).cast(TimestampType))
+    else df
 
   /** The fan-out shared by the batch transform and StreamingMetrics, so its
     * semantics (null-pred handling, label canonicalization, value
@@ -195,14 +250,6 @@ object LogsToMetrics {
       * `value` and the percentile inputs.
       */
     def rows(df: DataFrame, tsCol: String): DataFrame = {
-      // Accept TIMESTAMP_NTZ event-time columns too (DuckDB/pandas-written
-      // parquet carries NTZ): under the engine's fixed UTC session timezone
-      // the cast is the identity instant, and unix_micros downstream
-      // requires the LTZ type.
-      val ts = df.schema.fields.find(_.name == tsCol).map(_.dataType.typeName) match {
-        case Some("timestamp_ntz") => col(tsCol).cast("timestamp")
-        case _                     => col(tsCol)
-      }
       // Each distinct condition is evaluated once per row, into one bit of
       // a 63-bit word `_m<w>`; a definition matches when all its bits are
       // set. The generated code per definition is then a mask test, not
@@ -230,10 +277,10 @@ object LogsToMetrics {
       val time =
         if (epochWindows) {
           // epoch-floor tumbling window in integer micros; per-definition size
-          val micros = unix_micros(ts)
+          val micros = unix_micros(col(tsCol))
           micros - pmod(micros, at(familyOf.map(windowMicrosOf), d))
-        } else ts
-      df.select(col("*") +: words: _*)
+        } else col(tsCol)
+      ltzEventTime(df, tsCol).select(col("*") +: words: _*)
         .select(col("*"), explode(array(ids: _*)).as("_d"))
         .filter(d.isNotNull)
         .select(Seq(time.as(if (epochWindows) "_wstart" else "_ts"), at(familyOf, d).as("_f"),

@@ -77,10 +77,12 @@ object MetricsSink {
 
   /** Shape a LogsToMetrics/StreamingMetrics output frame into exportable
     * point rows (`window_end` is the reference's point timestamp — the
-    * window close).
+    * window close). A point without a value — a min/max/avg/p50 group
+    * whose rows all lack the field — is dropped here, so no export path
+    * reads a null `value`.
     */
   def formatted(df: DataFrame, metricNamePrefix: String = ""): DataFrame =
-    df.select(
+    df.filter(col("value").isNotNull).select(
       col("window_end").as("timestamp"),
       concat(lit(metricNamePrefix), col("metric")).as("metric_name"),
       col("value"),

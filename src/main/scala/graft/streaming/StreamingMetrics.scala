@@ -115,13 +115,8 @@ object StreamingMetrics {
       winFn: Column => Column): DataFrame = {
     val fo = new LogsToMetrics.FanOut(defs, mode, epochWindows = false)
     // Normalize TIMESTAMP_NTZ BEFORE the watermark: Spark rejects NTZ
-    // watermark columns outright ([EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE]),
-    // so the fan-out's own NTZ branch can never fire on this path.
-    val tsNorm = stream.schema.fields.find(_.name == tsCol).map(_.dataType.typeName) match {
-      case Some("timestamp_ntz") => stream.withColumn(tsCol, col(tsCol).cast("timestamp"))
-      case _                     => stream
-    }
-    fo.rows(tsNorm.withWatermark(tsCol, watermarkDelay), tsCol)
+    // watermark columns outright ([EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE]).
+    fo.rows(LogsToMetrics.ltzEventTime(stream, tsCol).withWatermark(tsCol, watermarkDelay), tsCol)
       .groupBy(winFn(col("_ts")).as("window") +: fo.keys: _*)
       .agg(fo.aggregates.head, fo.aggregates.tail: _*)
       .select(

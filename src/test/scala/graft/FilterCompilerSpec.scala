@@ -1,14 +1,14 @@
 package graft
 
-import graft.filter.FilterCompiler
 import graft.model.FilterCondition
+import graft.pipeline.LogsToMetrics
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Reference truth table: /root/reference/tests/test_filter.py (all cases,
-  * incl. the type-mismatch edges at :95-120) evaluated against
-  * FilterCompiler in typed mode, plus the schemaless-mode behaviors.
+/** Reference truth table: tests/test_filter.py (all cases, incl. the
+  * type-mismatch edges at :95-120) evaluated against the filter predicate
+  * of `LogsToMetrics.Mode` in typed mode, plus the schemaless-mode
+  * behaviors.
   */
 class FilterCompilerSpec extends SparkSpec {
   import spark.implicits._
@@ -22,7 +22,7 @@ class FilterCompilerSpec extends SparkSpec {
   ).toDF
 
   private def matches(conds: FilterCondition*): Long =
-    df.filter(FilterCompiler.compile(conds, df.schema)).count()
+    df.filter(LogsToMetrics.Typed(df.schema).pred(conds)).count()
 
   test("equals matches / rejects") {
     assert(matches(FilterCondition("severity", "ERROR", "equals")) == 2)
@@ -57,6 +57,15 @@ class FilterCompilerSpec extends SparkSpec {
     assert(matches(FilterCondition("response_time", "0", "greater_than")) == 2)
   }
 
+  test("booleans are numbers to greater_than/less_than, not strings (Python bool ⊂ int)") {
+    val b = Seq(true, false).toDF("ok")
+    def n(c: FilterCondition) = b.filter(LogsToMetrics.Typed(b.schema).pred(Seq(c))).count()
+    assert(n(FilterCondition("ok", "0", "greater_than")) == 1) // True > 0.0
+    assert(n(FilterCondition("ok", "1", "less_than")) == 1)    // False < 1.0
+    assert(n(FilterCondition("ok", "true", "equals")) == 0)
+    assert(n(FilterCondition("ok", "true", "contains")) == 0)
+  }
+
   test("unparsable numeric config value ⇒ false (evaluator error ⇒ False)") {
     assert(matches(FilterCondition("response_time", "not_a_number", "greater_than")) == 0)
     assert(matches(FilterCondition("response_time", "not_a_number", "less_than")) == 0)
@@ -87,7 +96,7 @@ class FilterCompilerSpec extends SparkSpec {
       Map[String, String]()
     ).toDF("msg")
     def n(c: FilterCondition) =
-      m.filter(FilterCompiler.compileSchemaless(Seq(c), col("msg"))).count()
+      m.filter(LogsToMetrics.Schemaless("msg").pred(Seq(c))).count()
     assert(n(FilterCondition("severity", "ERROR", "equals")) == 1)
     assert(n(FilterCondition("missing", "x", "equals")) == 0)
     // documented divergence: numeric string DOES satisfy gt in map mode

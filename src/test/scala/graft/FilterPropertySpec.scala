@@ -1,12 +1,12 @@
 package graft
 
-import graft.filter.FilterCompiler
 import graft.model.{FilterCondition, FilterOps}
+import graft.pipeline.LogsToMetrics
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
-/** Property parity: FilterCompiler (typed mode) ≡ a direct Scala transcription
-  * of the reference evaluator (/root/reference/beametrics/filter.py:13-45)
+/** Property parity: the typed-mode `LogsToMetrics.Mode` filter predicate ≡ a
+  * direct Scala transcription of the reference evaluator (filter.py:13-45)
   * over randomly generated messages and condition lists, and the epoch-floor
   * window law (/root/reference/beametrics/pipeline.py:67-70).
   */
@@ -61,7 +61,7 @@ class FilterPropertySpec extends SparkSpec {
       {
         val df = msgs.toDF
         val sparkKept = df
-          .filter(FilterCompiler.compile(conds, df.schema))
+          .filter(LogsToMetrics.Typed(df.schema).pred(conds))
           .collect()
           .map(r => (Option(r.get(0)), Option(r.get(1)), Option(r.get(2)), Option(r.get(3))))
           .toList
@@ -106,7 +106,7 @@ class FilterPropertySpec extends SparkSpec {
         c.copy(field = if (c.field == "s2" || c.field == "d2") "missing" else c.field))
       val df = maps.zipWithIndex.map { case (m, i) => (i, m) }.toDF("i", "msg")
       val kept = df
-        .filter(FilterCompiler.compileSchemaless(conds, org.apache.spark.sql.functions.col("msg")))
+        .filter(LogsToMetrics.Schemaless("msg").pred(conds))
         .select("i").as[Int].collect().toSet
       val refKept = maps.zipWithIndex.collect {
         case (m, i) if conds.forall(refMap(m, _)) => i
@@ -117,7 +117,6 @@ class FilterPropertySpec extends SparkSpec {
 
   test("epoch-floor window start law: start ≤ ts < start+size, start % size == 0") {
     import graft.model.{MetricDefinition, MetricType}
-    import graft.pipeline.LogsToMetrics
     import org.apache.spark.sql.functions._
     samples(Gen.zip(Gen.long, Gen.long), 12, 7L).foreach { case (tsRaw, sizeRaw) =>
       val ts = math.abs(tsRaw % 4102444800L) // within year ~2100

@@ -81,6 +81,23 @@ class MetricsSinkSpec extends SparkSpec {
     collectedOk.size() // silence unused warning
   }
 
+  test("a point without a value (no row carries the field) is skipped, strict or not") {
+    val df = Seq((new java.sql.Timestamp(60000L), "ERROR")).toDF("ts", "severity")
+    val defs = Seq(MetricDefinition("rt_max", MetricType.Max("rt"), windowSizeSec = 60))
+    val pts = LogsToMetrics(defs, LogsToMetrics.Typed(df.schema))(df)
+    assert(pts.collect().map(r => Option(r.getAs[java.lang.Double]("value"))).toSeq == Seq(None))
+    for (strict <- Seq(false, true)) {
+      MetricsSinkSpec.seen.clear()
+      MetricsSink.writeBatch(MetricsSink.formatted(pts),
+        _ => new MetricsSink {
+          def write(p: MetricPoint): Unit = MetricsSinkSpec.seen.add(p.metricName)
+        },
+        strict)
+      assert(MetricsSinkSpec.seen.isEmpty, s"strict=$strict")
+    }
+    assert(MetricsSink.gcmRequestShaped(MetricsSink.formatted(pts)).count() == 0)
+  }
+
   test("multiRouter: a failing target does not starve later targets") {
     MetricsSinkSpec.seen.clear()
     val ok = MetricsSink.Target("ok/",

@@ -26,6 +26,15 @@ class ModelSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](MetricType.parse("avg", None))
   }
 
+  test("a condition's numeric comparand parses like Python float(), decimal literals only") {
+    def n(v: String) = FilterCondition("f", v, FilterOps.GreaterThan).number
+    assert(n(" 1.5 ").contains(1.5))
+    assert(n("-3e2").contains(-300.0))
+    assert(n(".5").contains(0.5))
+    // Java suffix forms parse with toDouble, not with float()
+    assert(n("100d").isEmpty && n("1.5f").isEmpty && n("abc").isEmpty && n("").isEmpty)
+  }
+
   test("unsupported export type rejected (test_main.py:112-131)") {
     intercept[IllegalArgumentException](ExportTarget.parse("stdout"))
     assert(ExportTarget.parse("local") == ExportTarget.Local)
