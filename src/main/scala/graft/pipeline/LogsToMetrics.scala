@@ -18,7 +18,7 @@ import org.apache.spark.sql.types._
   *    `array<int>` of `CASE WHEN pred_i THEN i END`, nulls dropped, where
   *    `pred_i` tests definition i's bits in a word holding every distinct
   *    filter condition's result for the row. The aggregation groups by
-  *    (definition family id, window, dynamic label values); one
+  *    (window end, definition family id, dynamic label values); one
   *    hash-partial aggregation runs before the only exchange — Beam's
   *    combiner lifting ≡ Spark partial+final HashAggregate.
   *  - Everything a definition fixes at plan time (window size, kind,
@@ -164,29 +164,37 @@ object LogsToMetrics {
       df.withColumn(tsCol, col(tsCol).cast(TimestampType))
     else df
 
-  /** The fan-out shared by the batch transform and StreamingMetrics, so its
-    * semantics (null-pred handling, label canonicalization, value
-    * projection, merging) live in exactly one place.
+  /** The fan-out and aggregation shared by the batch transform and
+    * StreamingMetrics, so their semantics (null-pred handling, label
+    * canonicalization, value projection, merging, windowing) live in
+    * exactly one place.
     *
-    * With `epochWindows` (the batch transform) each row's tumbling window
-    * start `_wstart` is computed here, in its definition's window size;
-    * otherwise the caller windows the event time `_ts` (streaming).
+    * Without `window`, each row's tumbling window is computed here in its
+    * definition's own size (the batch transform and tumbling streams); the
+    * grouping key is the window end `_wend`, which carries the event-time
+    * column's metadata — on a watermarked stream, the watermark delay, so
+    * Spark evicts a window and drops late rows when `_wend <= watermark`,
+    * the rule `window()` applies to `window.end`. With `window`, that
+    * column over the event time `_ts` is the grouping key (sliding and
+    * session windows).
     *
     * Definitions with equal (name, kind, sorted label keys, and window
-    * size when `epochWindows`) form one *family*: their points merge, as
+    * size without `window`) form one *family*: their points merge, as
     * they would under the reference's (metric, labels, window) key. A label
     * key that every member fixes to the same static value is a family
     * constant, attached after the aggregation; every other key (dynamic,
     * or static with different values across members) is a per-row value
     * `_l0`, `_l1`, … in key order.
     */
-  private[graft] final class FanOut(defs: Seq[MetricDefinition], mode: Mode, epochWindows: Boolean) {
+  private[graft] final class FanOut(
+      defs: Seq[MetricDefinition],
+      mode: Mode,
+      window: Option[Column => Column] = None) {
     require(defs.nonEmpty, "at least one metric definition")
 
+    private val epochWindows = window.isEmpty
     private val pctl = pctlPlan(defs)
-
-    /** Every partial aggregate of the shared pass; `value` picks one. */
-    val aggregates: Seq[Column] = aggValues(pctl)
+    private val aggregates = aggValues(pctl)
 
     /** Sorted label entries per definition: Left(static value) or
       * Right(message field); dynamic wins on a key conflict (pipeline.py:198).
@@ -216,6 +224,20 @@ object LogsToMetrics {
       }
     }
 
+    /** Per family, a 64-bit id of everything its aggregated rows mean: name,
+      * kind, window size, and each label key with its constant or a
+      * per-row marker. The shuffle and the streaming state are keyed by
+      * it, so a query restarted from its checkpoint with an edited config
+      * finds each in-flight window's family by content, not by position.
+      */
+    private val familyIds: Seq[Long] = families.indices.map { f =>
+      val (name, kind, keys, size) = families(f)
+      contentId(Seq(name, kind.toString, size.toString) ++
+        keys.zip(constants(f)).flatMap { case (k, c) => Seq(k, c.fold("dynamic")("static:" + _)) })
+    }
+    require(familyIds.distinct.size == familyIds.size,
+      s"family id collision among ${families.map(_._1).mkString(", ")}")
+
     /** Per definition: the expressions of its family's per-row label keys. */
     private val rowLabels: Seq[Seq[Column]] = defs.indices.map { i =>
       labelSpecs(i).zip(constants(familyOf(i))).collect { case ((_, src), None) =>
@@ -227,9 +249,31 @@ object LogsToMetrics {
     private val values = defs.map(valueCol(_, mode))
     private val distinctValues = values.distinct
 
-    /** Aggregation keys, with `_wstart` when `epochWindows`. */
-    val keys: Seq[Column] = (if (epochWindows) Seq(col("_wstart")) else Nil) ++
-      (col("_f") +: (0 until labelWidth).map(j => col(s"_l$j")))
+    /** One point per (window, family, per-row label values) of `df`, in the
+      * output schema. Aggregated rows of a family this fan-out does not
+      * define (streaming state restored under an edited config) are dropped.
+      */
+    def points(df: DataFrame, tsCol: String): DataFrame = {
+      val (key, start, end) = window match {
+        case None =>
+          (col("_wend"), timestamp_micros(unix_micros(col("_wend")) - windowMicros), col("_wend"))
+        case Some(w) => (w(col("_ts")).as("_w"), col("_w.start"), col("_w.end"))
+      }
+      rows(df, tsCol)
+        .groupBy(key +: col("_f") +: (0 until labelWidth).map(j => col(s"_l$j")): _*)
+        .agg(aggregates.head, aggregates.tail: _*)
+        .withColumn("_f", array_position(lit(familyIds.toArray), col("_f")).cast(IntegerType) - 1)
+        // Known families only. The test reads an aggregate so that Catalyst
+        // keeps it above the aggregation: a test of `_f` alone is pushed
+        // below it, where it sees new rows but never restored state.
+        .filter(when(col("_f") >= 0, col("_cnt") >= 0))
+        .select(
+          metric.as("metric"),
+          start.as("window_start"),
+          end.as("window_end", Metadata.empty), // the watermark stays on the key
+          labels.as("labels"),
+          value.as("value"))
+    }
 
     /** Keep rows matching ANY definition; pushdown-friendly. */
     def anyMatch: Column = disjunction(defs.map(_.filters).distinct)
@@ -245,11 +289,11 @@ object LogsToMetrics {
         if (rest.exists(_.isEmpty)) mode.pred(Seq(c)) else mode.pred(Seq(c)) && disjunction(rest)
       }.reduce(_ || _)
 
-    /** One row per (input row, matching definition): `_wstart` (epoch
-      * micros) or `_ts` (a timestamp), `_f`, the per-row label values,
-      * `value` and the percentile inputs.
+    /** One row per (input row, matching definition): `_wend` or `_ts` (a
+      * timestamp), `_f` (the family id), the per-row label values, `value`
+      * and the percentile inputs.
       */
-    def rows(df: DataFrame, tsCol: String): DataFrame = {
+    private def rows(df: DataFrame, tsCol: String): DataFrame = {
       // Each distinct condition is evaluated once per row, into one bit of
       // a 63-bit word `_m<w>`; a definition matches when all its bits are
       // set. The generated code per definition is then a mask test, not
@@ -274,31 +318,36 @@ object LogsToMetrics {
       val pvals =
         (if (pctl.withExact) Seq(when(kind === 4, value).as("pval")) else Nil) ++
           (if (pctl.approxAccuracy.nonEmpty) Seq(when(kind === 5, value).as("pval_a")) else Nil)
+      val in = ltzEventTime(df, tsCol)
       val time =
         if (epochWindows) {
-          // epoch-floor tumbling window in integer micros; per-definition size
+          // end of the epoch-floor tumbling window in integer micros;
+          // per-definition size
           val micros = unix_micros(col(tsCol))
-          micros - pmod(micros, at(familyOf.map(windowMicrosOf), d))
-        } else col(tsCol)
-      ltzEventTime(df, tsCol).select(col("*") +: words: _*)
+          val size = at(familyOf.map(windowMicrosOf), d)
+          timestamp_micros(micros - pmod(micros, size) + size).as("_wend", in.schema(tsCol).metadata)
+        } else col(tsCol).as("_ts")
+      in.select(col("*") +: words: _*)
         .select(col("*"), explode(array(ids: _*)).as("_d"))
         .filter(d.isNotNull)
-        .select(Seq(time.as(if (epochWindows) "_wstart" else "_ts"), at(familyOf, d).as("_f"),
-          value.as("value")) ++
+        .select(Seq(time, at(familyOf.map(familyIds), d).as("_f"), value.as("value")) ++
           (0 until labelWidth).map(j => pick(listOf, labelLists.map(_.lift(j))).as(s"_l$j")) ++
           pvals: _*)
     }
 
-    /** Plan-time facts of the family in `_f`, read after the aggregation. */
-    def metric: Column = at(representative.map(defs(_).name), col("_f"))
-    def windowMicros: Column = at(families.indices.map(windowMicrosOf), col("_f"))
+    /** Plan-time facts of the family at position `_f`, read after the
+      * aggregation.
+      */
+    private def metric: Column = at(representative.map(defs(_).name), col("_f"))
+    private def windowMicros: Column = at(families.indices.map(windowMicrosOf), col("_f"))
     private def windowMicrosOf(f: Int): Long = defs(representative(f)).effectiveWindowSizeSec * 1000000L
-    def value: Column = finalValue(pctl, at(representative.map(i => aggKind(defs(i).metricType)), col("_f")))
+    private def value: Column =
+      finalValue(pctl, at(representative.map(i => aggKind(defs(i).metricType)), col("_f")))
 
     /** The family's label map in key order: constants from a literal array,
       * per-row keys from `_l0`, `_l1`, …; one map shape per distinct layout.
       */
-    def labels: Column = {
+    private def labels: Column = {
       val layouts: Seq[Seq[(String, Either[Int, Int])]] = families.indices.map { f =>
         val keys = labelSpecs(representative(f)).map(_._1)
         val isConst = constants(f).map(_.isDefined)
@@ -333,18 +382,21 @@ object LogsToMetrics {
       }
   }
 
+  /** A stable 64-bit digest of `parts` (length-prefixed, so unambiguous). */
+  private def contentId(parts: Seq[String]): Long = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    parts.foreach { p =>
+      val b = p.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      md.update(java.nio.ByteBuffer.allocate(4).putInt(b.length).array())
+      md.update(b)
+    }
+    java.nio.ByteBuffer.wrap(md.digest()).getLong
+  }
+
   def apply(defs: Seq[MetricDefinition], mode: Mode, tsCol: String = "ts")(
       df: DataFrame): DataFrame = {
-    val fo = new FanOut(defs, mode, epochWindows = true)
-    fo.rows(df.filter(fo.anyMatch), tsCol)
-      .groupBy(fo.keys: _*)
-      .agg(fo.aggregates.head, fo.aggregates.tail: _*)
-      .select(
-        fo.metric.as("metric"),
-        timestamp_micros(col("_wstart")).as("window_start"),
-        timestamp_micros(col("_wstart") + fo.windowMicros).as("window_end"),
-        fo.labels.as("labels"),
-        fo.value.as("value"))
+    val fo = new FanOut(defs, mode)
+    fo.points(df.filter(fo.anyMatch), tsCol)
   }
 
   /** Which percentile aggregates this fan-out needs: exact median and/or

@@ -198,14 +198,91 @@ class StreamingMetricsSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("multiple window sizes produce one streaming aggregation each") {
-    val mixed = defs.head +: Seq(
-      MetricDefinition("m5", MetricType.Count, windowSizeSec = 300))
+  test("10, 60 and 300 s windows plan one scan, parse, watermark and state store") {
+    import org.apache.spark.sql.execution.streaming.operators.stateful.{EventTimeWatermarkExec, StateStoreSaveExec}
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    val mixed = Seq(10, 60, 300).map(s => MetricDefinition(s"m$s", MetricType.Count,
+      Seq(FilterCondition("severity", "ERROR", "equals")), windowSizeSec = s))
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(java.sql.Timestamp, Array[Byte])]
     val parsed = Ingest.parseSchemaless(mem.toDF.toDF("ts", "raw"), "raw")
-    val outs = StreamingMetrics.attach(parsed, mixed, LogsToMetrics.Schemaless("msg"))
-    assert(outs.size == 2)
+    // a delay the data never passes: no window closes, so the last batch
+    // is the data batch, not a no-data eviction batch over an empty scan
+    val outs = StreamingMetrics.attach(parsed, mixed, LogsToMetrics.Schemaless("msg"),
+      watermarkDelay = "1 hour")
+    val queries = outs.map(_.writeStream.format("memory").queryName(s"plan_pin_${System.nanoTime}")
+      .outputMode("append").start())
+    try {
+      mem.addData((at(65), msg("ERROR", 1).getBytes("UTF-8")))
+      queries.foreach(_.processAllAvailable())
+      val plans = queries.map(_.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan)
+      def count(f: org.apache.spark.sql.execution.SparkPlan => Int) = plans.map(p => p.collect { case n => f(n) }.sum).sum
+      val scans = count(n => if (n.children.isEmpty) 1 else 0)
+      val parses = count(_.expressions.map(_.collect { case e if e.prettyName == "from_json" => e }.size).sum)
+      val watermarks = count { case _: EventTimeWatermarkExec => 1; case _ => 0 }
+      val stores = count { case _: StateStoreSaveExec => 1; case _ => 0 }
+      assert((scans, parses, watermarks, stores) == (1, 1, 1, 1),
+        s"(scans, from_json, watermarks, state stores) over ${plans.size} queries:\n${plans.mkString("\n")}")
+    } finally queries.foreach(_.stop())
+  }
+
+  test("mixed window sizes stream ≡ batch for closed windows (typed, schemaless, TIMESTAMP_NTZ)") {
+    val mixed = Seq(
+      MetricDefinition("errors", MetricType.Count,
+        Seq(FilterCondition("severity", "ERROR", "equals")), windowSizeSec = 10),
+      // equal name, kind and labels, another size: separate points
+      MetricDefinition("errors", MetricType.Count,
+        Seq(FilterCondition("severity", "ERROR", "equals")), windowSizeSec = 60),
+      MetricDefinition("bytes_by_user", MetricType.Sum("bytes"),
+        dynamicLabels = Map("user" -> "user"), windowSizeSec = 60),
+      MetricDefinition("max_bytes", MetricType.Max("bytes"),
+        staticLabels = Map("env" -> "test"), windowSizeSec = 300),
+      MetricDefinition("all", MetricType.Count, windowSizeSec = 300))
+    val rnd = new scala.util.Random(17)
+    def ev(sec: Long): (java.sql.Timestamp, String, Int, String) =
+      (at(sec), Seq("ERROR", "INFO", "WARN")(rnd.nextInt(3)), rnd.nextInt(1000), s"u${rnd.nextInt(3)}")
+    // four micro-batches over [0, 800): each shuffled, and each after the
+    // first also carries rows up to 15 s behind the previous batch's
+    // maximum — out of order, but inside the 20 s watermark delay
+    val onTime = (0 until 4).map { k =>
+      val early = if (k == 0) Nil else Seq.fill(5)(ev(k * 200L - 1 - rnd.nextInt(15)))
+      rnd.shuffle(Seq.fill(40)(ev(k * 200L + rnd.nextInt(200))) ++ early)
+    }
+    // every window of these ends by 600 s, behind the watermark the fourth
+    // batch left (its maximum, near 800 s, minus 20 s): dropped
+    val late = Seq(ev(5), ev(123), ev(299), ev(450))
+    val flush = Seq(ev(10000)) // watermark 9980: closes every earlier window
+    val closedBy = 9980L
+
+    def check(name: String, shape: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): Unit = {
+      implicit val sqlCtx = spark.sqlContext
+      val mem = MemoryStream[(java.sql.Timestamp, String, Int, String)]
+      val stream = shape(mem.toDF.toDF("ts", "severity", "bytes", "user"))
+      val mode = if (stream.columns.contains("msg")) LogsToMetrics.Schemaless("msg") else LogsToMetrics.Typed(stream.schema)
+      val Seq(out) = StreamingMetrics.attach(stream, mixed, mode, watermarkDelay = "20 seconds")
+      val qn = s"mixed_$name"
+      val q = out.writeStream.format("memory").queryName(qn).outputMode("append").start()
+      def points(df: org.apache.spark.sql.DataFrame) =
+        df.select($"metric", unix_timestamp($"window_start"), unix_timestamp($"window_end"), $"labels", $"value")
+          .as[(String, Long, Long, Map[String, String], Double)].collect().toSet
+      val streamed = try {
+        (onTime :+ late :+ flush).foreach { b => mem.addData(b); q.processAllAvailable() }
+        points(spark.table(qn))
+      } finally q.stop()
+      def batch(rows: Seq[(java.sql.Timestamp, String, Int, String)]) =
+        points(LogsToMetrics(mixed, mode)(shape(rows.toDF("ts", "severity", "bytes", "user")))
+          .filter(unix_timestamp($"window_end") <= closedBy))
+      val expected = batch(onTime.flatten ++ flush)
+      assert(streamed == expected, s"$name: missing=${expected -- streamed} extra=${streamed -- expected}")
+      assert(batch(onTime.flatten ++ late ++ flush) != expected, "the late rows must matter to the batch")
+      assert(Set(10L, 60L).forall(s => streamed.exists(p => p._1 == "errors" && p._3 - p._2 == s)),
+        s"$name: both error window sizes must emit: $streamed")
+    }
+
+    check("typed", identity)
+    check("schemaless", df => Ingest.parseSchemaless(
+      df.select($"ts", encode(to_json(struct($"severity", $"bytes", $"user")), "UTF-8").as("raw")), "raw"))
+    check("ntz", _.withColumn("ts", to_timestamp_ntz(date_format($"ts", "yyyy-MM-dd HH:mm:ss"))))
   }
 
   test("multi-sink fan-out: N targets from one cached micro-batch (one source read)") {
@@ -371,6 +448,73 @@ class StreamingMetricsSpec extends SparkSpec {
     assert(points("e2e-run1") == points("e2e-run2"),
       s"crashed+restarted run must emit exactly the uninterrupted run's points:\n" +
         s"  crashed+restarted: ${points("e2e-run1")}\n  uninterrupted:     ${points("e2e-run2")}")
+  }
+
+  // Restarts from a checkpoint under an edited config. The first run sees
+  // 2 ERROR and 1 INFO event in [0, 60) and stops with the window open;
+  // the restart lands an event at 130 s that closes it.
+  private val aErrors = MetricDefinition("a_errors", MetricType.Count,
+    Seq(FilterCondition("severity", "ERROR", "equals")), windowSizeSec = 60)
+  private val bInfos = MetricDefinition("b_infos", MetricType.Count,
+    Seq(FilterCondition("severity", "INFO", "equals")), windowSizeSec = 60)
+  private val closedWindow = Set(("a_errors", 0L, 2.0), ("b_infos", 0L, 1.0))
+
+  /** The points the restart under `after` emits. */
+  private def afterRestart(before: Seq[MetricDefinition], after: Seq[MetricDefinition]): Set[(String, Long, Double)] = {
+    import java.nio.file.{Files, Paths}
+    import org.apache.spark.sql.{Dataset, Row}
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    import scala.jdk.CollectionConverters._
+    val schema = StructType(Seq(StructField("severity", StringType), StructField("user", StringType),
+      StructField("ts_sec", LongType)))
+    val in = Files.createTempDirectory("restart-in").toString
+    val ckpt = Files.createTempDirectory("restart-ck").toString
+    def write(name: String, sev: String, tsSec: Long): Unit =
+      Files.write(Paths.get(in, name), s"""{"severity": "$sev", "user": "u1", "ts_sec": $tsSec}""".getBytes("UTF-8"))
+    val emitted = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long, Double)]()
+    def run(defs: Seq[MetricDefinition]): Unit = {
+      val raw = spark.readStream.format("binaryFile")
+        .schema("path STRING, modificationTime TIMESTAMP, length BIGINT, content BINARY")
+        .load(in).select(col("content").as("raw"))
+      val parsed = Ingest.parseTyped(raw, "raw", schema)
+        .select(timestamp_seconds($"msg.ts_sec").as("ts"), $"msg.severity".as("severity"), $"msg.user".as("user"))
+      val Seq(out) = StreamingMetrics.attach(parsed, defs, LogsToMetrics.Typed(parsed.schema))
+      val q = out.writeStream.option("checkpointLocation", ckpt).outputMode("append")
+        .foreachBatch { (df: Dataset[Row], _: Long) =>
+          df.select($"metric", unix_timestamp($"window_start"), $"value").as[(String, Long, Double)]
+            .collect().foreach(emitted.add)
+        }
+        .start()
+      try q.processAllAvailable() finally q.stop()
+    }
+    write("a.json", "ERROR", 10); write("b.json", "ERROR", 20); write("c.json", "INFO", 30)
+    run(before)
+    assert(emitted.isEmpty, s"[0, 60) must still be open before the restart: $emitted")
+    write("d.json", "INFO", 130)
+    run(after)
+    emitted.asScala.toSet
+  }
+
+  test("restart with two definitions swapped keeps each metric's counts") {
+    assert(afterRestart(Seq(aErrors, bInfos), Seq(bInfos, aErrors)) == closedWindow)
+  }
+
+  test("restart with a definition added keeps the in-flight counts on their metrics") {
+    val cWarns = MetricDefinition("c_warns", MetricType.Count,
+      Seq(FilterCondition("severity", "WARN", "equals")), windowSizeSec = 60)
+    assert(afterRestart(Seq(aErrors, bInfos), Seq(cWarns, aErrors, bInfos)) == closedWindow)
+  }
+
+  test("restart with a definition removed drops its in-flight window, not another metric's") {
+    assert(afterRestart(Seq(aErrors, bInfos), Seq(bInfos)) == Set(("b_infos", 0L, 1.0)))
+  }
+
+  test("restart with a widened dynamic-label key fails on the state schema") {
+    val widened = aErrors.copy(dynamicLabels = Map("user" -> "user"))
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      afterRestart(Seq(aErrors, bInfos), Seq(widened, bInfos))
+    }
+    assert(e.getMessage.contains("STATE_STORE_KEY_SCHEMA_NOT_COMPATIBLE"), e.getMessage)
   }
 
   test("sliding windows stream ≡ batch across 3+ micro-batches (append emit-on-close)") {
