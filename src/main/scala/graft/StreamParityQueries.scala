@@ -121,7 +121,7 @@ object StreamParityQueries {
       replayToCompletion(s, ev0,
         ts => Seq(Tuple1(ts)).toDF("ts"),
         st => graft.streaming.StreamingMetrics
-          .attachSliding(st, defs, slideSec = 60, LogsToMetrics.Typed(ev0.schema)).head)
+          .attachSliding(st, defs, slideSec = 60, LogsToMetrics.Typed(ev0.schema)))
         .select(secs(col("window_start")).as("w_start"),
           col("value").as("cnt_value"))
         .orderBy("w_start")

@@ -106,10 +106,4 @@ object Ingest {
   def parseVariant(df: DataFrame, rawCol: String, msgCol: String = "msg"): DataFrame =
     df.withColumn(msgCol, try_parse_json(decodeCascade(col(rawCol))))
       .filter(col(msgCol).isNotNull)
-
-  /** Flatten a parsed struct payload to top-level columns, keeping extras. */
-  def flattened(df: DataFrame, msgCol: String = "msg"): DataFrame = {
-    val others = df.columns.filterNot(_ == msgCol).map(col)
-    df.select(others :+ col(s"$msgCol.*"): _*)
-  }
 }

@@ -42,7 +42,10 @@ import org.apache.spark.sql.types._
   *    (pipeline.py:67-70): `start = ts - (ts mod size)`, here in integer
   *    microseconds, supporting a different window size per config in the
   *    same single pass (Spark's `window()` needs a static size; this
-  *    formulation doesn't).
+  *    formulation doesn't). A sliding window is the same math with a slide
+  *    shorter than the size: each row gets every window end whose start is
+  *    a multiple of the slide and whose window holds it, as
+  *    `window(ts, size, slide)` assigns, still one pass for every size.
   *  - Labels are canonicalized at *plan time*: keys are sorted once per
   *    definition family (the reference sorts label tuples at runtime per
   *    element, pipeline.py:172) and the output map is built in key order.
@@ -164,22 +167,44 @@ object LogsToMetrics {
       df.withColumn(tsCol, col(tsCol).cast(TimestampType))
     else df
 
+  /** How a fan-out assigns windows. A tumbling window is a sliding window
+    * whose slide equals its size.
+    */
+  private[graft] sealed trait Windows
+  private[graft] object Windows {
+    /** Each definition's own size, sliding by that size. */
+    case object Tumbling extends Windows
+    /** Each definition's own size, sliding by `slideSec`, which no
+      * definition's size may be shorter than.
+      */
+    final case class Sliding(slideSec: Long) extends Windows {
+      require(slideSec > 0, "slide must be positive")
+    }
+    /** Per-key activity bursts separated by at least `gapSec` of silence
+      * (Spark's `session_window`); definition sizes do not apply.
+      */
+    final case class Session(gapSec: Long) extends Windows {
+      require(gapSec > 0, "session gap must be positive")
+    }
+  }
+
   /** The fan-out and aggregation shared by the batch transform and
     * StreamingMetrics, so their semantics (null-pred handling, label
     * canonicalization, value projection, merging, windowing) live in
     * exactly one place.
     *
-    * Without `window`, each row's tumbling window is computed here in its
-    * definition's own size (the batch transform and tumbling streams); the
-    * grouping key is the window end `_wend`, which carries the event-time
-    * column's metadata — on a watermarked stream, the watermark delay, so
-    * Spark evicts a window and drops late rows when `_wend <= watermark`,
-    * the rule `window()` applies to `window.end`. With `window`, that
-    * column over the event time `_ts` is the grouping key (sliding and
-    * session windows).
+    * Tumbling and sliding windows are computed here, in each definition's
+    * own size: a row gets every window end `e` with `e - size <= ts < e`
+    * and `e - size` an epoch multiple of the slide (one end when the slide
+    * is the size). The grouping key is the window end `_wend`, which
+    * carries the event-time column's metadata — on a watermarked stream,
+    * the watermark delay, so Spark evicts a window and drops late rows
+    * when `_wend <= watermark`, the rule `window()` applies to
+    * `window.end`. Session windows group by `session_window` over the
+    * event time `_ts`.
     *
     * Definitions with equal (name, kind, sorted label keys, and window
-    * size without `window`) form one *family*: their points merge, as
+    * size unless sessions) form one *family*: their points merge, as
     * they would under the reference's (metric, labels, window) key. A label
     * key that every member fixes to the same static value is a family
     * constant, attached after the aggregation; every other key (dynamic,
@@ -189,10 +214,19 @@ object LogsToMetrics {
   private[graft] final class FanOut(
       defs: Seq[MetricDefinition],
       mode: Mode,
-      window: Option[Column => Column] = None) {
+      windows: Windows = Windows.Tumbling) {
     require(defs.nonEmpty, "at least one metric definition")
 
-    private val epochWindows = window.isEmpty
+    /** The slide in micros when some window is longer than it; `None` when
+      * every window tumbles.
+      */
+    private val slideMicros: Option[Long] = windows match {
+      case Windows.Sliding(slide) =>
+        defs.foreach(d => require(slide <= d.effectiveWindowSizeSec,
+          s"slide of $slide s is longer than the ${d.effectiveWindowSizeSec} s window of definition ${d.name}"))
+        Some(slide * 1000000L).filter(_ => defs.exists(_.effectiveWindowSizeSec != slide))
+      case _ => None
+    }
     private val pctl = pctlPlan(defs)
     private val aggregates = aggValues(pctl)
 
@@ -204,8 +238,10 @@ object LogsToMetrics {
         d.dynamicLabels.toSeq.map { case (k, f) => k -> Right(f) }).sortBy(_._1)
     }
     private val familyKeys = defs.zip(labelSpecs).map { case (d, ls) =>
-      (d.name, aggKind(d.metricType), ls.map(_._1),
-        if (epochWindows) d.effectiveWindowSizeSec else 0L)
+      (d.name, aggKind(d.metricType), ls.map(_._1), windows match {
+        case Windows.Session(_) => 0L
+        case _                  => d.effectiveWindowSizeSec
+      })
     }
     private val families = familyKeys.distinct
     private val familyOf: Seq[Int] = familyKeys.map(families.zipWithIndex.toMap)
@@ -254,10 +290,11 @@ object LogsToMetrics {
       * define (streaming state restored under an edited config) are dropped.
       */
     def points(df: DataFrame, tsCol: String): DataFrame = {
-      val (key, start, end) = window match {
-        case None =>
+      val (key, start, end) = windows match {
+        case Windows.Session(gap) =>
+          (session_window(col("_ts"), s"$gap seconds").as("_w"), col("_w.start"), col("_w.end"))
+        case _ =>
           (col("_wend"), timestamp_micros(unix_micros(col("_wend")) - windowMicros), col("_wend"))
-        case Some(w) => (w(col("_ts")).as("_w"), col("_w.start"), col("_w.end"))
       }
       rows(df, tsCol)
         .groupBy(key +: col("_f") +: (0 until labelWidth).map(j => col(s"_l$j")): _*)
@@ -289,9 +326,9 @@ object LogsToMetrics {
         if (rest.exists(_.isEmpty)) mode.pred(Seq(c)) else mode.pred(Seq(c)) && disjunction(rest)
       }.reduce(_ || _)
 
-    /** One row per (input row, matching definition): `_wend` or `_ts` (a
-      * timestamp), `_f` (the family id), the per-row label values, `value`
-      * and the percentile inputs.
+    /** One row per (input row, matching definition, window end): `_wend`
+      * (`_ts` for sessions), `_f` (the family id), the per-row label values,
+      * `value` and the percentile inputs.
       */
     private def rows(df: DataFrame, tsCol: String): DataFrame = {
       // Each distinct condition is evaluated once per row, into one bit of
@@ -319,20 +356,34 @@ object LogsToMetrics {
         (if (pctl.withExact) Seq(when(kind === 4, value).as("pval")) else Nil) ++
           (if (pctl.approxAccuracy.nonEmpty) Seq(when(kind === 5, value).as("pval_a")) else Nil)
       val in = ltzEventTime(df, tsCol)
-      val time =
-        if (epochWindows) {
-          // end of the epoch-floor tumbling window in integer micros;
-          // per-definition size
-          val micros = unix_micros(col(tsCol))
-          val size = at(familyOf.map(windowMicrosOf), d)
-          timestamp_micros(micros - pmod(micros, size) + size).as("_wend", in.schema(tsCol).metadata)
-        } else col(tsCol).as("_ts")
-      in.select(col("*") +: words: _*)
+      val meta = in.schema(tsCol).metadata
+      val micros = unix_micros(col(tsCol))
+      val size = at(familyOf.map(windowMicrosOf), d)
+      val perRow = Seq(at(familyOf.map(familyIds), d).as("_f"), value.as("value")) ++
+        (0 until labelWidth).map(j => pick(listOf, labelLists.map(_.lift(j))).as(s"_l$j")) ++
+        pvals
+      val matched = in.select(col("*") +: words: _*)
         .select(col("*"), explode(array(ids: _*)).as("_d"))
         .filter(d.isNotNull)
-        .select(Seq(time, at(familyOf.map(familyIds), d).as("_f"), value.as("value")) ++
-          (0 until labelWidth).map(j => pick(listOf, labelLists.map(_.lift(j))).as(s"_l$j")) ++
-          pvals: _*)
+      (windows, slideMicros) match {
+        case (Windows.Session(_), _) => matched.select(col(tsCol).as("_ts") +: perRow: _*)
+        case (_, None) =>
+          // end of the epoch-floor tumbling window in integer micros;
+          // per-definition size
+          matched.select(timestamp_micros(micros - pmod(micros, size) + size).as("_wend", meta) +: perRow: _*)
+        case (_, Some(slide)) =>
+          // the ends from the first window holding ts to the last, one
+          // slide apart: one generator, whatever size / slide is. The
+          // sequence is never empty; `explode_outer`, because for `explode`
+          // Catalyst infers a `size(sequence) > 0` filter that builds each
+          // sequence twice (a null event time keeps its row, as tumbling).
+          val first = micros - pmod(micros - size, lit(slide)) + slide
+          val last = micros - pmod(micros, lit(slide)) + size
+          val ends = matched.select(sequence(first, last, lit(slide)).as("_ends") +: perRow: _*)
+            .select(col("*"), explode_outer(col("_ends")).as("_e"))
+          ends.select(timestamp_micros(col("_e")).as("_wend", meta) +:
+            ends.columns.toSeq.filterNot(Set("_ends", "_e")).map(col): _*)
+      }
     }
 
     /** Plan-time facts of the family at position `_f`, read after the

@@ -59,20 +59,6 @@ final class ConsoleSink extends MetricsSink {
   def write(p: MetricPoint): Unit = println(p.toJsonLine)
 }
 
-/** Collects into memory — test sink. */
-final class CollectingSink extends MetricsSink {
-  val collected = new scala.collection.mutable.ArrayBuffer[MetricPoint]
-  def write(p: MetricPoint): Unit = collected.synchronized { collected += p }
-}
-
-/** Throws on a configurable metric name — exercises error policy in tests. */
-final class FailingSink(failOn: String, underlying: MetricsSink) extends MetricsSink {
-  def write(p: MetricPoint): Unit = {
-    if (p.metricName == failOn) throw new RuntimeException(s"export failed for ${p.metricName}")
-    underlying.write(p)
-  }
-}
-
 object MetricsSink {
 
   /** Shape a LogsToMetrics/StreamingMetrics output frame into exportable

@@ -3,14 +3,14 @@ package graft.streaming
 import graft.model.MetricDefinition
 import graft.pipeline.LogsToMetrics
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** Structured Streaming face of the engine — the reference's native mode
   * (an unbounded Pub/Sub stream windowed into metric points,
   * /root/reference/beametrics/pipeline.py:164-186).
   *
   * [[attach]] is the batch transform (graft.pipeline.LogsToMetrics) over a
-  * watermarked event time: one scan, one parse and ONE stateful
+  * watermarked event time, and [[attachSliding]] the same with a slide
+  * shorter than the window: one scan, one parse and ONE stateful
   * aggregation for every window size, as the reference's
   * `DynamicFixedWindows` gives each element its own size in one pass.
   * Each fanned-out row is keyed by its definition's window end `_wend`,
@@ -52,14 +52,16 @@ object StreamingMetrics {
       mode: LogsToMetrics.Mode,
       tsCol: String = "ts",
       watermarkDelay: String = "0 seconds"): Seq[DataFrame] =
-    Seq(new LogsToMetrics.FanOut(defs, mode).points(watermarked(stream, tsCol, watermarkDelay), tsCol))
+    Seq(aggregate(stream, defs, mode, LogsToMetrics.Windows.Tumbling, tsCol, watermarkDelay))
 
-  /** Sliding-window variant: each event lands in windowSize/slide
-    * overlapping windows (Spark's window() with a slide duration — the
-    * streaming twin of the batch q_sliding_window shape). One aggregation
-    * per distinct window size, same append-mode emit-on-window-close;
-    * state grows by the overlap factor (each key holds size/slide live
-    * windows), still watermark-evicted.
+  /** Sliding-window variant: each event lands in every window of its
+    * definition's size that starts on a multiple of `slideSec` and holds
+    * it (Spark's `window(ts, size, slide)`; the streaming twin of the batch
+    * q_sliding_window shape). Same one aggregation for every window size,
+    * keyed by the window end, and the same append-mode emit-on-window-close;
+    * state grows by the overlap factor (each key holds up to size/slide
+    * live windows), still watermark-evicted. A slide longer than some
+    * definition's window is rejected.
     */
   def attachSliding(
       stream: DataFrame,
@@ -67,14 +69,8 @@ object StreamingMetrics {
       slideSec: Long,
       mode: LogsToMetrics.Mode,
       tsCol: String = "ts",
-      watermarkDelay: String = "0 seconds"): Seq[DataFrame] = {
-    require(defs.nonEmpty, "at least one metric definition")
-    require(slideSec > 0, "slide must be positive")
-    defs.groupBy(_.effectiveWindowSizeSec).toSeq.sortBy(_._1).map { case (wsize, group) =>
-      new LogsToMetrics.FanOut(group, mode, Some(ts => window(ts, s"$wsize seconds", s"$slideSec seconds")))
-        .points(watermarked(stream, tsCol, watermarkDelay), tsCol)
-    }
-  }
+      watermarkDelay: String = "0 seconds"): DataFrame =
+    aggregate(stream, defs, mode, LogsToMetrics.Windows.Sliding(slideSec), tsCol, watermarkDelay)
 
   /** Gap-based session-window variant (Spark's session_window — the
     * streaming twin of the batch q_session_window shape): windows are
@@ -90,15 +86,20 @@ object StreamingMetrics {
       gapSec: Long,
       mode: LogsToMetrics.Mode,
       tsCol: String = "ts",
-      watermarkDelay: String = "0 seconds"): DataFrame = {
-    require(gapSec > 0, "session gap must be positive")
-    new LogsToMetrics.FanOut(defs, mode, Some(ts => session_window(ts, s"$gapSec seconds")))
-      .points(watermarked(stream, tsCol, watermarkDelay), tsCol)
-  }
+      watermarkDelay: String = "0 seconds"): DataFrame =
+    aggregate(stream, defs, mode, LogsToMetrics.Windows.Session(gapSec), tsCol, watermarkDelay)
 
-  /** Normalize TIMESTAMP_NTZ BEFORE the watermark: Spark rejects NTZ
-    * watermark columns outright ([EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE]).
+  /** The fan-out over the watermarked event time. TIMESTAMP_NTZ is
+    * normalized BEFORE the watermark: Spark rejects NTZ watermark columns
+    * outright ([EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE]).
     */
-  private def watermarked(stream: DataFrame, tsCol: String, delay: String): DataFrame =
-    LogsToMetrics.ltzEventTime(stream, tsCol).withWatermark(tsCol, delay)
+  private def aggregate(
+      stream: DataFrame,
+      defs: Seq[MetricDefinition],
+      mode: LogsToMetrics.Mode,
+      windows: LogsToMetrics.Windows,
+      tsCol: String,
+      delay: String): DataFrame =
+    new LogsToMetrics.FanOut(defs, mode, windows)
+      .points(LogsToMetrics.ltzEventTime(stream, tsCol).withWatermark(tsCol, delay), tsCol)
 }

@@ -10,6 +10,12 @@ import org.apache.spark.sql.types._
 class IngestSpec extends SparkSpec {
   import spark.implicits._
 
+  /** Flatten a parsed struct payload to top-level columns, keeping extras. */
+  private def flattened(df: org.apache.spark.sql.DataFrame, msgCol: String = "msg") = {
+    val others = df.columns.filterNot(_ == msgCol).map(col)
+    df.select(others :+ col(s"$msgCol.*"): _*)
+  }
+
   test("charset cascade decodes shift-jis after utf-8 fails (pipeline.py:86-96)") {
     val jp = """{"msg": "テスト"}"""
     val sjis = jp.getBytes("Shift_JIS")
@@ -70,7 +76,7 @@ class IngestSpec extends SparkSpec {
     ).toDF("raw")
     val out = Ingest.parseTyped(df, "raw", schema)
     assert(out.count() == 2)
-    val rows = Ingest.flattened(out)
+    val rows = flattened(out)
       .select($"severity", $"bytes")
       .collect()
       .map(r => (r.getString(0), Option(r.get(1))))

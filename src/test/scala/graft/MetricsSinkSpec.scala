@@ -11,6 +11,7 @@ import org.apache.spark.sql.functions._
   */
 class MetricsSinkSpec extends SparkSpec {
   import spark.implicits._
+  import MetricsSinkSpec.FailingSink
 
   private def points(): org.apache.spark.sql.DataFrame = {
     val df = Seq(
@@ -195,4 +196,12 @@ class MetricsSinkSpec extends SparkSpec {
 
 object MetricsSinkSpec {
   val seen: java.util.Set[String] = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  /** Throws on a configurable metric name — exercises the error policy. */
+  final class FailingSink(failOn: String, underlying: MetricsSink) extends MetricsSink {
+    def write(p: MetricPoint): Unit = {
+      if (p.metricName == failOn) throw new RuntimeException(s"export failed for ${p.metricName}")
+      underlying.write(p)
+    }
+  }
 }

@@ -76,6 +76,22 @@ class PlanSpec extends SparkSpec {
     assert(fallbacks.isEmpty, s"interpreted expressions in the fan-out plan: $fallbacks")
   }
 
+  test("the log→metrics core imports nothing from graft.ext") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    // the boundary a core/ext build split rests on
+    val root = Paths.get(sys.props("user.dir"), "src", "main", "scala", "graft")
+    def sources(dir: Path): Seq[Path] =
+      Files.walk(dir).iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
+    val core = Seq("model", "ingest", "pipeline", "sinks").flatMap(d => sources(root.resolve(d))) ++
+      Seq("streaming/StreamingMetrics.scala", "Main.scala").map(root.resolve)
+    assert(core.size >= 7 && core.forall(Files.isRegularFile(_)), s"core sources under $root: $core")
+    // `graft.ext` by its full name, or `ext.X` relative to package graft
+    val reach = """graft\.ext\b|(?<![\w.])ext\.[A-Za-z{_]""".r
+    val offenders = core.filter(f => reach.findFirstIn(Files.readString(f)).isDefined)
+    assert(offenders.isEmpty, s"core sources that reach into graft.ext: $offenders")
+  }
+
   test("q_join_enrich: dimension side broadcasts, fact side stays unshuffled") {
     val p = plan("q_join_enrich")
     assert(p.contains("BroadcastHashJoin"), s"dim join must broadcast:\n$p")

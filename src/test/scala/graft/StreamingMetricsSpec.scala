@@ -203,27 +203,33 @@ class StreamingMetricsSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
     val mixed = Seq(10, 60, 300).map(s => MetricDefinition(s"m$s", MetricType.Count,
       Seq(FilterCondition("severity", "ERROR", "equals")), windowSizeSec = s))
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(java.sql.Timestamp, Array[Byte])]
-    val parsed = Ingest.parseSchemaless(mem.toDF.toDF("ts", "raw"), "raw")
+    val mode = LogsToMetrics.Schemaless("msg")
     // a delay the data never passes: no window closes, so the last batch
     // is the data batch, not a no-data eviction batch over an empty scan
-    val outs = StreamingMetrics.attach(parsed, mixed, LogsToMetrics.Schemaless("msg"),
-      watermarkDelay = "1 hour")
-    val queries = outs.map(_.writeStream.format("memory").queryName(s"plan_pin_${System.nanoTime}")
-      .outputMode("append").start())
-    try {
-      mem.addData((at(65), msg("ERROR", 1).getBytes("UTF-8")))
-      queries.foreach(_.processAllAvailable())
-      val plans = queries.map(_.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan)
-      def count(f: org.apache.spark.sql.execution.SparkPlan => Int) = plans.map(p => p.collect { case n => f(n) }.sum).sum
-      val scans = count(n => if (n.children.isEmpty) 1 else 0)
-      val parses = count(_.expressions.map(_.collect { case e if e.prettyName == "from_json" => e }.size).sum)
-      val watermarks = count { case _: EventTimeWatermarkExec => 1; case _ => 0 }
-      val stores = count { case _: StateStoreSaveExec => 1; case _ => 0 }
-      assert((scans, parses, watermarks, stores) == (1, 1, 1, 1),
-        s"(scans, from_json, watermarks, state stores) over ${plans.size} queries:\n${plans.mkString("\n")}")
-    } finally queries.foreach(_.stop())
+    val delay = "1 hour"
+    Seq[(String, org.apache.spark.sql.DataFrame => Seq[org.apache.spark.sql.DataFrame])](
+      "tumbling" -> (StreamingMetrics.attach(_, mixed, mode, watermarkDelay = delay)),
+      "sliding by 10 s" -> (p => Seq(StreamingMetrics.attachSliding(p, mixed, slideSec = 10, mode,
+        watermarkDelay = delay)))
+    ).foreach { case (name, attach) =>
+      implicit val sqlCtx = spark.sqlContext
+      val mem = MemoryStream[(java.sql.Timestamp, Array[Byte])]
+      val outs = attach(Ingest.parseSchemaless(mem.toDF.toDF("ts", "raw"), "raw"))
+      val queries = outs.map(_.writeStream.format("memory").queryName(s"plan_pin_${System.nanoTime}")
+        .outputMode("append").start())
+      try {
+        mem.addData((at(65), msg("ERROR", 1).getBytes("UTF-8")))
+        queries.foreach(_.processAllAvailable())
+        val plans = queries.map(_.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan)
+        def count(f: org.apache.spark.sql.execution.SparkPlan => Int) = plans.map(p => p.collect { case n => f(n) }.sum).sum
+        val scans = count(n => if (n.children.isEmpty) 1 else 0)
+        val parses = count(_.expressions.map(_.collect { case e if e.prettyName == "from_json" => e }.size).sum)
+        val watermarks = count { case _: EventTimeWatermarkExec => 1; case _ => 0 }
+        val stores = count { case _: StateStoreSaveExec => 1; case _ => 0 }
+        assert((scans, parses, watermarks, stores) == (1, 1, 1, 1),
+          s"$name: (scans, from_json, watermarks, state stores) over ${plans.size} queries:\n${plans.mkString("\n")}")
+      } finally queries.foreach(_.stop())
+    }
   }
 
   test("mixed window sizes stream ≡ batch for closed windows (typed, schemaless, TIMESTAMP_NTZ)") {
@@ -518,43 +524,80 @@ class StreamingMetricsSpec extends SparkSpec {
   }
 
   test("sliding windows stream ≡ batch across 3+ micro-batches (append emit-on-close)") {
-    // the streaming twin of the batch q_sliding_window shape: 300 s
-    // windows sliding by 60 s, each event in 5 buckets
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(java.sql.Timestamp, Double)]
-    val typed = mem.toDF.toDF("ts", "v")
-    val sdefs = Seq(MetricDefinition("ev_count", MetricType.Count, windowSizeSec = 300))
-    val Seq(out) =
-      StreamingMetrics.attachSliding(typed, sdefs, slideSec = 60,
-        LogsToMetrics.Typed(typed.schema))
-    val q = out.writeStream.format("memory").queryName("sslide").outputMode("append").start()
-    val batches = Seq(
-      Seq(65L, 80L, 110L),
-      Seq(130L, 170L),
-      Seq(250L))
-    try {
-      batches.foreach { b =>
-        mem.addData(b.map(s => (at(s), 1.0)))
-        q.processAllAvailable()
-      }
-      mem.addData((at(10000), 1.0)) // advance the watermark, close every earlier window
-      q.processAllAvailable()
-      val streamed = spark.table("sslide")
-        .select(unix_timestamp($"window_start").as("ws"), $"value")
-        .as[(Long, Double)].collect().toSet
-      // batch reference: the same events through the static window() shape,
-      // restricted to windows CLOSED at the final watermark (end ≤ 10000)
-      val batch = batches.flatten.map(s => Tuple1(at(s))).toDF("ts")
-        .groupBy(window($"ts", "300 seconds", "60 seconds").as("w"))
-        .agg(count(lit(1)).as("cnt"))
-        .filter(unix_timestamp($"w.end") <= 10000L)
-        .select(unix_timestamp($"w.start"), $"cnt".cast("double"))
-        .as[(Long, Double)].collect().toSet
-      assert(streamed == batch,
-        s"missing=${batch -- streamed} extra=${streamed -- batch}")
-      // overlap sanity: 6 events × 5 buckets ⇒ well over 5 distinct windows
-      assert(streamed.size >= 5 && streamed.exists(_._2 > 1.0))
-    } finally q.stop()
+    // the streaming twin of the batch q_sliding_window shape, one
+    // aggregation for every size: 60, 250 and 300 s windows sliding by
+    // 60 s; 250 s is not a multiple of the slide
+    val sdefs = Seq(
+      MetricDefinition("events", MetricType.Count, windowSizeSec = 300),
+      // equal name, kind and labels, another size: separate points
+      MetricDefinition("events", MetricType.Count, windowSizeSec = 250),
+      MetricDefinition("v_by_user", MetricType.Sum("v"), dynamicLabels = Map("user" -> "user"), windowSizeSec = 60),
+      MetricDefinition("u1_max", MetricType.Max("v"),
+        Seq(FilterCondition("user", "u1", "equals")), windowSizeSec = 250))
+    val tooShort = MetricDefinition("short", MetricType.Count, windowSizeSec = 30)
+    val rejected = intercept[IllegalArgumentException](StreamingMetrics.attachSliding(
+      Seq((at(0), 1.0)).toDF("ts", "v"), sdefs :+ tooShort, slideSec = 60, LogsToMetrics.Schemaless("msg")))
+    assert(rejected.getMessage.contains("slide of 60 s is longer than the 30 s window of definition short"),
+      rejected.getMessage)
+
+    val rnd = new scala.util.Random(23)
+    def ev(sec: Long): (java.sql.Timestamp, Double, String) =
+      (at(sec), rnd.nextInt(100).toDouble, s"u${rnd.nextInt(3)}")
+    // four micro-batches over [0, 800), each shuffled; each after the first
+    // also carries rows just behind the previous one, inside the 20 s delay
+    val onTime = (0 until 4).map { k =>
+      val early = if (k == 0) Nil else Seq.fill(5)(ev(k * 200L - 1 - rnd.nextInt(15)))
+      rnd.shuffle(Seq.fill(30)(ev(k * 200L + rnd.nextInt(200))) ++ early)
+    }
+    // every window holding one of these ends by 720 s, behind the watermark
+    // the fourth batch left: dropped in every size
+    val late = Seq(ev(5), ev(123), ev(299), ev(450))
+    val flush = Seq(ev(10000)) // watermark 9980: closes every earlier window
+    val closedBy = 9980L
+
+    def points(df: org.apache.spark.sql.DataFrame) =
+      df.select($"metric", unix_timestamp($"window_start"), unix_timestamp($"window_end"), $"labels", $"value")
+        .as[(String, Long, Long, Map[String, String], Double)].collect().toSet
+    // Spark's window(ts, size, slide) per definition, closed windows only
+    def batch(rows: Seq[(java.sql.Timestamp, Double, String)]) = {
+      val df = rows.toDF("ts", "v", "user")
+      def agg(metric: String, size: Int, in: org.apache.spark.sql.DataFrame,
+          value: org.apache.spark.sql.Column, byUser: Boolean = false) =
+        in.groupBy(window($"ts", s"$size seconds", "60 seconds").as("w") +: (if (byUser) Seq($"user") else Nil): _*)
+          .agg(value.cast("double").as("value"))
+          .select(lit(metric).as("metric"), $"w.start".as("window_start"), $"w.end".as("window_end"),
+            (if (byUser) map(lit("user"), $"user") else typedLit(Map.empty[String, String])).as("labels"),
+            $"value")
+      points(Seq(
+        agg("events", 300, df, count(lit(1))),
+        agg("events", 250, df, count(lit(1))),
+        agg("v_by_user", 60, df, sum($"v"), byUser = true),
+        agg("u1_max", 250, df.filter($"user" === "u1"), max($"v"))
+      ).reduce(_ unionByName _).filter(unix_timestamp($"window_end") <= closedBy))
+    }
+    val expected = batch(onTime.flatten ++ flush)
+    assert(batch(onTime.flatten ++ late ++ flush) != expected, "the late rows must matter to the batch")
+    assert(Set(60L, 250L, 300L).forall(s => expected.exists(p => p._3 - p._2 == s)) &&
+      expected.exists(p => p._3 - p._2 == 300 && p._2 % 300 != 0), s"every size, overlapping: $expected")
+
+    def check(name: String, shape: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): Unit = {
+      implicit val sqlCtx = spark.sqlContext
+      val mem = MemoryStream[(java.sql.Timestamp, Double, String)]
+      val stream = shape(mem.toDF.toDF("ts", "v", "user"))
+      val mode = if (stream.columns.contains("msg")) LogsToMetrics.Schemaless("msg") else LogsToMetrics.Typed(stream.schema)
+      val out = StreamingMetrics.attachSliding(stream, sdefs, slideSec = 60, mode, watermarkDelay = "20 seconds")
+      val qn = s"sslide_$name"
+      val q = out.writeStream.format("memory").queryName(qn).outputMode("append").start()
+      val streamed = try {
+        (onTime :+ late :+ flush).foreach { b => mem.addData(b); q.processAllAvailable() }
+        points(spark.table(qn))
+      } finally q.stop()
+      assert(streamed == expected, s"$name: missing=${expected -- streamed} extra=${streamed -- expected}")
+    }
+
+    check("typed", identity)
+    check("schemaless", df => Ingest.parseSchemaless(
+      df.select($"ts", encode(to_json(struct($"v", $"user")), "UTF-8").as("raw")), "raw"))
   }
 
   test("session windows stream ≡ batch across 3+ micro-batches (gap close + merge)") {
