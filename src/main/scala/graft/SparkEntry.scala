@@ -214,8 +214,8 @@ object SparkEntry {
     // typed variant_get extraction → aggregate.
     "q_variant_extract" -> { (s, dir) =>
       val raw = ev(s, dir).select(col("event_type"), encode(col("props"), "UTF-8").as("raw"))
-      Ingest
-        .parseVariant(raw, "raw")
+      raw.withColumn("msg", try_parse_json(Ingest.decodeCascade(col("raw"))))
+        .filter(col("msg").isNotNull)
         .select(col("event_type"),
           expr("variant_get(msg, '$.k', 'long')").as("k"))
         .groupBy("event_type")

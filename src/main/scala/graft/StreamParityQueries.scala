@@ -181,26 +181,24 @@ object StreamParityQueries {
     },
 
     // §2.3 SESSION windows through the streaming engine, oracle-checked:
-    // per-user activity bursts with a 1-day silence gap (user_id as a
-    // dynamic label — the q_session_window batch shape), replayed +
-    // sentinel-closed. A session ends at last_event + gap, so the
-    // sentinel sits 2 days past max-ts (> gap) and every real session
-    // closes; the sentinel's own (user -1) session never does. The
-    // oracle is the classic gap-and-island SQL — the recursive-free
-    // sessionization a warehouse runs — which must agree with Spark's
-    // session_window state machine merge-for-merge.
+    // per-user activity bursts with a 1-day silence gap (the
+    // q_session_window batch shape) as a plain session_window count over
+    // the watermarked replay, sentinel-closed. A session ends at
+    // last_event + gap, so the sentinel sits 2 days past max-ts (> gap)
+    // and every real session closes; the sentinel's own (user -1) session
+    // never does. The oracle is the classic gap-and-island SQL — the
+    // recursive-free sessionization a warehouse runs — which must agree
+    // with Spark's session_window state machine merge-for-merge.
     "q_stream_session_parity" -> { (s, dir) =>
       import s.implicits._
       val ev0 = ev(s, dir).select(col("ts"), col("user_id"))
-      val defs = Seq(MetricDefinition("sess_count", MetricType.Count,
-        dynamicLabels = Map("u" -> "user_id")))
       replayToCompletion(s, ev0,
         ts => Seq((ts, -1L)).toDF("ts", "user_id"),
-        st => graft.streaming.StreamingMetrics
-          .attachSession(st, defs, gapSec = 86400, LogsToMetrics.Typed(ev0.schema)))
-        .select(try_element_at(col("labels"), lit("u")).cast("long").as("user_id"),
-          secs(col("window_start")).as("sess_start"),
-          col("value").as("cnt_value"))
+        _.withWatermark("ts", "0 seconds")
+          .groupBy(session_window(col("ts"), "86400 seconds").as("sw"), col("user_id"))
+          .count())
+        .select(col("user_id"), secs(col("sw.start")).as("sess_start"),
+          col("count").cast("double").as("cnt_value"))
         .orderBy("user_id", "sess_start")
     },
 

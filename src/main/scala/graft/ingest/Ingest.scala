@@ -95,15 +95,4 @@ object Ingest {
       .withColumn(msgCol, from_json(col("_graft_dec"), schema))
       .filter(col("_graft_valid"))
       .drop("_graft_valid", "_graft_dec")
-
-  /** Spark 4 VARIANT mode: decode → `parse_json` into a `VariantType`
-    * column — schemaless like the map mode but with native typed access
-    * (`variant_get(msg, '$.path', 'type')`), binary-encoded storage, and
-    * shredding-friendly scans. Malformed rows drop via `try_parse_json` ⇒
-    * null. The modern choice when readers want per-field types without a
-    * declared schema.
-    */
-  def parseVariant(df: DataFrame, rawCol: String, msgCol: String = "msg"): DataFrame =
-    df.withColumn(msgCol, try_parse_json(decodeCascade(col(rawCol))))
-      .filter(col(msgCol).isNotNull)
 }

@@ -167,27 +167,6 @@ object LogsToMetrics {
       df.withColumn(tsCol, col(tsCol).cast(TimestampType))
     else df
 
-  /** How a fan-out assigns windows. A tumbling window is a sliding window
-    * whose slide equals its size.
-    */
-  private[graft] sealed trait Windows
-  private[graft] object Windows {
-    /** Each definition's own size, sliding by that size. */
-    case object Tumbling extends Windows
-    /** Each definition's own size, sliding by `slideSec`, which no
-      * definition's size may be shorter than.
-      */
-    final case class Sliding(slideSec: Long) extends Windows {
-      require(slideSec > 0, "slide must be positive")
-    }
-    /** Per-key activity bursts separated by at least `gapSec` of silence
-      * (Spark's `session_window`); definition sizes do not apply.
-      */
-    final case class Session(gapSec: Long) extends Windows {
-      require(gapSec > 0, "session gap must be positive")
-    }
-  }
-
   /** The fan-out and aggregation shared by the batch transform and
     * StreamingMetrics, so their semantics (null-pred handling, label
     * canonicalization, value projection, merging, windowing) live in
@@ -200,33 +179,33 @@ object LogsToMetrics {
     * carries the event-time column's metadata — on a watermarked stream,
     * the watermark delay, so Spark evicts a window and drops late rows
     * when `_wend <= watermark`, the rule `window()` applies to
-    * `window.end`. Session windows group by `session_window` over the
-    * event time `_ts`.
+    * `window.end`. `slideSec` is the slide of every window (each
+    * definition's own size when `None`: tumbling), and no definition's
+    * window may be shorter than it.
     *
-    * Definitions with equal (name, kind, sorted label keys, and window
-    * size unless sessions) form one *family*: their points merge, as
-    * they would under the reference's (metric, labels, window) key. A label
-    * key that every member fixes to the same static value is a family
-    * constant, attached after the aggregation; every other key (dynamic,
-    * or static with different values across members) is a per-row value
-    * `_l0`, `_l1`, … in key order.
+    * Definitions with equal (name, kind, sorted label keys, window size)
+    * form one *family*: their points merge, as they would under the
+    * reference's (metric, labels, window) key. A label key that every
+    * member fixes to the same static value is a family constant, attached
+    * after the aggregation; every other key (dynamic, or static with
+    * different values across members) is a per-row value `_l0`, `_l1`, …
+    * in key order.
     */
   private[graft] final class FanOut(
       defs: Seq[MetricDefinition],
       mode: Mode,
-      windows: Windows = Windows.Tumbling) {
+      slideSec: Option[Long] = None) {
     require(defs.nonEmpty, "at least one metric definition")
 
     /** The slide in micros when some window is longer than it; `None` when
       * every window tumbles.
       */
-    private val slideMicros: Option[Long] = windows match {
-      case Windows.Sliding(slide) =>
-        defs.foreach(d => require(slide <= d.effectiveWindowSizeSec,
-          s"slide of $slide s is longer than the ${d.effectiveWindowSizeSec} s window of definition ${d.name}"))
-        Some(slide * 1000000L).filter(_ => defs.exists(_.effectiveWindowSizeSec != slide))
-      case _ => None
-    }
+    private val slideMicros: Option[Long] = slideSec.filter { slide =>
+      require(slide > 0, "slide must be positive")
+      defs.foreach(d => require(slide <= d.effectiveWindowSizeSec,
+        s"slide of $slide s is longer than the ${d.effectiveWindowSizeSec} s window of definition ${d.name}"))
+      defs.exists(_.effectiveWindowSizeSec != slide)
+    }.map(_ * 1000000L)
     private val pctl = pctlPlan(defs)
     private val aggregates = aggValues(pctl)
 
@@ -238,10 +217,7 @@ object LogsToMetrics {
         d.dynamicLabels.toSeq.map { case (k, f) => k -> Right(f) }).sortBy(_._1)
     }
     private val familyKeys = defs.zip(labelSpecs).map { case (d, ls) =>
-      (d.name, aggKind(d.metricType), ls.map(_._1), windows match {
-        case Windows.Session(_) => 0L
-        case _                  => d.effectiveWindowSizeSec
-      })
+      (d.name, aggKind(d.metricType), ls.map(_._1), d.effectiveWindowSizeSec)
     }
     private val families = familyKeys.distinct
     private val familyOf: Seq[Int] = familyKeys.map(families.zipWithIndex.toMap)
@@ -289,15 +265,9 @@ object LogsToMetrics {
       * output schema. Aggregated rows of a family this fan-out does not
       * define (streaming state restored under an edited config) are dropped.
       */
-    def points(df: DataFrame, tsCol: String): DataFrame = {
-      val (key, start, end) = windows match {
-        case Windows.Session(gap) =>
-          (session_window(col("_ts"), s"$gap seconds").as("_w"), col("_w.start"), col("_w.end"))
-        case _ =>
-          (col("_wend"), timestamp_micros(unix_micros(col("_wend")) - windowMicros), col("_wend"))
-      }
+    def points(df: DataFrame, tsCol: String): DataFrame =
       rows(df, tsCol)
-        .groupBy(key +: col("_f") +: (0 until labelWidth).map(j => col(s"_l$j")): _*)
+        .groupBy(col("_wend") +: col("_f") +: (0 until labelWidth).map(j => col(s"_l$j")): _*)
         .agg(aggregates.head, aggregates.tail: _*)
         .withColumn("_f", array_position(lit(familyIds.toArray), col("_f")).cast(IntegerType) - 1)
         // Known families only. The test reads an aggregate so that Catalyst
@@ -306,11 +276,10 @@ object LogsToMetrics {
         .filter(when(col("_f") >= 0, col("_cnt") >= 0))
         .select(
           metric.as("metric"),
-          start.as("window_start"),
-          end.as("window_end", Metadata.empty), // the watermark stays on the key
+          timestamp_micros(unix_micros(col("_wend")) - windowMicros).as("window_start"),
+          col("_wend").as("window_end", Metadata.empty), // the watermark stays on the key
           labels.as("labels"),
           value.as("value"))
-    }
 
     /** Keep rows matching ANY definition; pushdown-friendly. */
     def anyMatch: Column = disjunction(defs.map(_.filters).distinct)
@@ -326,9 +295,9 @@ object LogsToMetrics {
         if (rest.exists(_.isEmpty)) mode.pred(Seq(c)) else mode.pred(Seq(c)) && disjunction(rest)
       }.reduce(_ || _)
 
-    /** One row per (input row, matching definition, window end): `_wend`
-      * (`_ts` for sessions), `_f` (the family id), the per-row label values,
-      * `value` and the percentile inputs.
+    /** One row per (input row, matching definition, window end): `_wend`,
+      * `_f` (the family id), the per-row label values, `value` and the
+      * percentile inputs.
       */
     private def rows(df: DataFrame, tsCol: String): DataFrame = {
       // Each distinct condition is evaluated once per row, into one bit of
@@ -355,7 +324,10 @@ object LogsToMetrics {
       val pvals =
         (if (pctl.withExact) Seq(when(kind === 4, value).as("pval")) else Nil) ++
           (if (pctl.approxAccuracy.nonEmpty) Seq(when(kind === 5, value).as("pval_a")) else Nil)
-      val in = ltzEventTime(df, tsCol)
+      // a row without an event time has no window and makes no point; on
+      // a stream this filter reads the event time, so Spark keeps it above
+      // the watermark
+      val in = ltzEventTime(df, tsCol).filter(col(tsCol).isNotNull)
       val meta = in.schema(tsCol).metadata
       val micros = unix_micros(col(tsCol))
       val size = at(familyOf.map(windowMicrosOf), d)
@@ -365,18 +337,17 @@ object LogsToMetrics {
       val matched = in.select(col("*") +: words: _*)
         .select(col("*"), explode(array(ids: _*)).as("_d"))
         .filter(d.isNotNull)
-      (windows, slideMicros) match {
-        case (Windows.Session(_), _) => matched.select(col(tsCol).as("_ts") +: perRow: _*)
-        case (_, None) =>
+      slideMicros match {
+        case None =>
           // end of the epoch-floor tumbling window in integer micros;
           // per-definition size
           matched.select(timestamp_micros(micros - pmod(micros, size) + size).as("_wend", meta) +: perRow: _*)
-        case (_, Some(slide)) =>
+        case Some(slide) =>
           // the ends from the first window holding ts to the last, one
           // slide apart: one generator, whatever size / slide is. The
           // sequence is never empty; `explode_outer`, because for `explode`
           // Catalyst infers a `size(sequence) > 0` filter that builds each
-          // sequence twice (a null event time keeps its row, as tumbling).
+          // sequence twice.
           val first = micros - pmod(micros - size, lit(slide)) + slide
           val last = micros - pmod(micros, lit(slide)) + size
           val ends = matched.select(sequence(first, last, lit(slide)).as("_ends") +: perRow: _*)

@@ -121,13 +121,6 @@ object MetricsSink {
       aligned.as("interval_start_seconds"))
   }
 
-  /** Streaming entry: `stream.writeStream.foreachBatch(router(...))`. */
-  def router(
-      sinkFor: String => MetricsSink,
-      metricNamePrefix: String = "",
-      strict: Boolean = false): (DataFrame, Long) => Unit =
-    (batch, _) => writeBatch(formatted(batch, metricNamePrefix), sinkFor, strict)
-
   /** One export target: its metric-name prefix and per-metric sink factory. */
   final case class Target(
       metricNamePrefix: String,

@@ -10,9 +10,10 @@ import org.apache.spark.sql.DataFrame
   *
   * [[attach]] is the batch transform (graft.pipeline.LogsToMetrics) over a
   * watermarked event time, and [[attachSliding]] the same with a slide
-  * shorter than the window: one scan, one parse and ONE stateful
-  * aggregation for every window size, as the reference's
-  * `DynamicFixedWindows` gives each element its own size in one pass.
+  * shorter than the window; the reference has no other window kind (no
+  * session windows). One scan, one parse and ONE stateful aggregation
+  * serve every window size, as the reference's `DynamicFixedWindows`
+  * gives each element its own size in one pass.
   * Each fanned-out row is keyed by its definition's window end `_wend`,
   * which carries the watermark metadata of the event-time column, so Spark
   * evicts a window (emits it, append mode) and drops late rows when
@@ -22,7 +23,10 @@ import org.apache.spark.sql.DataFrame
   * time below `EventTimeWatermark`, so a gated row that matches no
   * definition would never advance the watermark and a quiet metric's
   * window would stay open. Such a row explodes to no definition id
-  * instead, above the watermark.
+  * instead, above the watermark. A row without an event time is dropped
+  * there too, before the explode: it has no window to close, so its group
+  * would never leave the state (the reference's event time, the Pub/Sub
+  * publish time, always exists).
   *
   * Late-data policy: the reference drops late records (Beam default,
   * allowed lateness 0 — SURVEY.md §2.3); `watermarkDelay = "0 seconds"`
@@ -52,7 +56,7 @@ object StreamingMetrics {
       mode: LogsToMetrics.Mode,
       tsCol: String = "ts",
       watermarkDelay: String = "0 seconds"): Seq[DataFrame] =
-    Seq(aggregate(stream, defs, mode, LogsToMetrics.Windows.Tumbling, tsCol, watermarkDelay))
+    Seq(aggregate(stream, defs, mode, None, tsCol, watermarkDelay))
 
   /** Sliding-window variant: each event lands in every window of its
     * definition's size that starts on a multiple of `slideSec` and holds
@@ -70,24 +74,7 @@ object StreamingMetrics {
       mode: LogsToMetrics.Mode,
       tsCol: String = "ts",
       watermarkDelay: String = "0 seconds"): DataFrame =
-    aggregate(stream, defs, mode, LogsToMetrics.Windows.Sliding(slideSec), tsCol, watermarkDelay)
-
-  /** Gap-based session-window variant (Spark's session_window — the
-    * streaming twin of the batch q_session_window shape): windows are
-    * per-key activity bursts separated by ≥ `gapSec` of silence, so
-    * per-config window sizes don't apply — every def shares the gap and
-    * ONE streaming aggregation. A session closes (and emits, append mode)
-    * when the watermark passes its end; state per key is the single open
-    * session, merged as micro-batches extend it.
-    */
-  def attachSession(
-      stream: DataFrame,
-      defs: Seq[MetricDefinition],
-      gapSec: Long,
-      mode: LogsToMetrics.Mode,
-      tsCol: String = "ts",
-      watermarkDelay: String = "0 seconds"): DataFrame =
-    aggregate(stream, defs, mode, LogsToMetrics.Windows.Session(gapSec), tsCol, watermarkDelay)
+    aggregate(stream, defs, mode, Some(slideSec), tsCol, watermarkDelay)
 
   /** The fan-out over the watermarked event time. TIMESTAMP_NTZ is
     * normalized BEFORE the watermark: Spark rejects NTZ watermark columns
@@ -97,9 +84,9 @@ object StreamingMetrics {
       stream: DataFrame,
       defs: Seq[MetricDefinition],
       mode: LogsToMetrics.Mode,
-      windows: LogsToMetrics.Windows,
+      slideSec: Option[Long],
       tsCol: String,
       delay: String): DataFrame =
-    new LogsToMetrics.FanOut(defs, mode, windows)
+    new LogsToMetrics.FanOut(defs, mode, slideSec)
       .points(LogsToMetrics.ltzEventTime(stream, tsCol).withWatermark(tsCol, delay), tsCol)
 }

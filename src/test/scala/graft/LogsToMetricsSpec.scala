@@ -2,6 +2,8 @@ package graft
 
 import graft.model._
 import graft.pipeline.LogsToMetrics
+import graft.sinks.{MetricPoint, MetricsSink}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 
 /** Core transform semantics mirrored from the reference pipeline tests
@@ -52,6 +54,21 @@ class LogsToMetricsSpec extends SparkSpec {
       .select(unix_timestamp($"window_start"), unix_timestamp($"window_end"))
       .as[(Long, Long)].head()
     assert(out == ((90L, 135L))) // floor(100/45)*45 = 90
+  }
+
+  test("a row without an event time makes no point, so a strict JSON-line export succeeds") {
+    val df = Seq(Row1(at(10), "ERROR", 1.0), Row1(null, "ERROR", 1.0)).toDF
+    val defs = Seq(MetricDefinition("errors", MetricType.Count,
+      Seq(FilterCondition("severity", "ERROR", "equals")), windowSizeSec = 60))
+    val pts = LogsToMetrics(defs, LogsToMetrics.Typed(df.schema))(df)
+    assert(pts.select($"metric", $"window_start".isNull, $"value")
+      .as[(String, Boolean, Double)].collect().toSeq == Seq(("errors", false, 1.0)))
+    val lines = spark.sparkContext.collectionAccumulator[String]
+    MetricsSink.writeBatch(MetricsSink.formatted(pts),
+      _ => new MetricsSink { def write(p: MetricPoint): Unit = lines.add(p.toJsonLine) },
+      strict = true)
+    assert(lines.value.asScala.toSeq == Seq(
+      """{"timestamp": "1970-01-01T00:01:00Z", "metric_name": "errors", "value": 1.0, "labels": {}}"""))
   }
 
   test("SUM of missing field contributes 0 (pipeline.py:200-208)") {

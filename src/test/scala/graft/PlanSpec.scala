@@ -18,7 +18,7 @@ class PlanSpec extends SparkSpec {
 
   test("q_multi_metric: config-predicate OR reaches the parquet scan") {
     val p = plan("q_multi_metric")
-    assert(p.contains("PushedFilters: [Or(EqualTo(event_type,error),EqualTo(event_type,click))]"),
+    assert(p.contains("PushedFilters: [IsNotNull(ts), Or(EqualTo(event_type,error),EqualTo(event_type,click))]"),
       s"fan-out predicates must push to the scan:\n$p")
   }
 

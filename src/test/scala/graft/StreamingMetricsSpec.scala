@@ -157,6 +157,26 @@ class StreamingMetricsSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("a row without an event time leaves no state once the watermark passes every window") {
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[(java.sql.Timestamp, String, Int)]
+    val in = mem.toDF.toDF("ts", "severity", "bytes")
+    val Seq(out) = StreamingMetrics.attach(in, defs, LogsToMetrics.Typed(in.schema))
+    val q = out.writeStream.format("memory").queryName("null_ts").outputMode("append").start()
+    try {
+      mem.addData((at(10), "ERROR", 5), (null, "ERROR", 7))
+      q.processAllAvailable()
+      // an event that no definition matches moves the watermark past [0, 60)
+      mem.addData((at(200), "INFO", 1))
+      q.processAllAvailable()
+      val emitted = spark.table("null_ts")
+        .select($"metric", unix_timestamp($"window_start").as("ws"), $"value")
+        .as[(String, Long, Double)].collect().toSet
+      assert(emitted == Set(("error_count", 0L, 1.0), ("bytes_sum", 0L, 5.0)))
+      assert(q.lastProgress.stateOperators(0).numRowsTotal == 0)
+    } finally q.stop()
+  }
+
   test("avg metric type aggregates correctly across micro-batches") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(java.sql.Timestamp, Array[Byte])]
@@ -352,7 +372,7 @@ class StreamingMetricsSpec extends SparkSpec {
     * is at-least-once, pipeline.py:211-233): FileStreamSpec proves source
     * checkpoint recovery and MetricsSinkSpec proves the idempotent wrapper
     * in isolation; this drives the FULL pipeline — file source → decode →
-    * windowed metric → foreachBatch(idempotent(router(sink))) — through the
+    * windowed metric → foreachBatch(idempotent(multiRouter(sink))) — through the
     * exact at-least-once gap: a crash AFTER the export succeeded but BEFORE
     * Structured Streaming committed the epoch. The restart replays the
     * batch (same batchId, offsets from the WAL); without the commit marker
@@ -389,8 +409,8 @@ class StreamingMetricsSpec extends SparkSpec {
     // keyed by run (the fan-out test's pattern), not an instance field
     def start(inDir: String, ckpt: String, commitDir: String,
         key: String, crashArm: java.util.concurrent.atomic.AtomicBoolean) = {
-      val inner = MetricsSink.idempotent(commitDir)(
-        MetricsSink.router(_ => new StreamingMetricsSpec.StaticSink(key), strict = true))
+      val inner = MetricsSink.idempotent(commitDir)(MetricsSink.multiRouter(
+        Seq(MetricsSink.Target("", _ => new StreamingMetricsSpec.StaticSink(key))), strict = true))
       pipeline(inDir).writeStream
         .option("checkpointLocation", ckpt)
         .outputMode("append")
@@ -598,53 +618,6 @@ class StreamingMetricsSpec extends SparkSpec {
     check("typed", identity)
     check("schemaless", df => Ingest.parseSchemaless(
       df.select($"ts", encode(to_json(struct($"v", $"user")), "UTF-8").as("raw")), "raw"))
-  }
-
-  test("session windows stream ≡ batch across 3+ micro-batches (gap close + merge)") {
-    // the streaming twin of the batch q_session_window shape: per-user
-    // activity bursts with a 60 s silence gap, user as a dynamic label
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(java.sql.Timestamp, String)]
-    val typed = mem.toDF.toDF("ts", "user")
-    val sdefs = Seq(MetricDefinition("sess_count", MetricType.Count,
-      dynamicLabels = Map("user" -> "user")))
-    val out = StreamingMetrics.attachSession(typed, sdefs, gapSec = 60,
-      LogsToMetrics.Typed(typed.schema))
-    val q = out.writeStream.format("memory").queryName("ssess").outputMode("append").start()
-    // u1: burst {10,40,90} then (gap > 60) burst {300}; u2: one burst
-    // {50,100} — spread over 3 micro-batches so sessions MERGE across
-    // batches (u1's 10–40 batch-1 state extends with 90 in batch 2)
-    val batches = Seq(
-      Seq((10L, "u1"), (40L, "u1"), (50L, "u2")),
-      Seq((90L, "u1"), (100L, "u2")),
-      Seq((300L, "u1")))
-    try {
-      batches.foreach { b =>
-        mem.addData(b.map { case (s, u) => (at(s), u) })
-        q.processAllAvailable()
-      }
-      mem.addData((at(10000), "uz")) // watermark past every session's close
-      q.processAllAvailable()
-      val streamed = spark.table("ssess")
-        .select($"labels"("user").as("user"),
-          unix_timestamp($"window_start").as("ss"),
-          unix_timestamp($"window_end").as("se"), $"value")
-        .as[(String, Long, Long, Double)].collect().toSet
-      // batch reference: static session_window over the same events,
-      // sessions closed by the final watermark
-      val batch = batches.flatten.map { case (s, u) => (at(s), u) }.toDF("ts", "user")
-        .groupBy($"user", session_window($"ts", "60 seconds").as("sw"))
-        .agg(count(lit(1)).as("cnt"))
-        .filter(unix_timestamp($"sw.end") <= 10000L)
-        .select($"user", unix_timestamp($"sw.start"), unix_timestamp($"sw.end"),
-          $"cnt".cast("double"))
-        .as[(String, Long, Long, Double)].collect().toSet
-      assert(streamed == batch,
-        s"missing=${batch -- streamed} extra=${streamed -- batch}")
-      // the cross-batch merge really happened: u1's first session spans
-      // 10→150 (90+gap) with 3 events despite arriving in two batches
-      assert(streamed.contains(("u1", 10L, 150L, 3.0)), s"got $streamed")
-    } finally q.stop()
   }
 }
 

@@ -57,4 +57,48 @@ class StreamingSessionSpec extends SparkSpec {
       assert(got == Set((0L, 10.0), (30L, 10.0)))
     } finally q.stop()
   }
+
+  test("session windows stream ≡ batch across 3+ micro-batches (gap close + merge)") {
+    // the streaming twin of the batch q_session_window shape, as
+    // q_stream_session_parity runs it: per-user activity bursts with a
+    // 60 s silence gap over a watermarked stream
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[(java.sql.Timestamp, String)]
+    val out = mem.toDF.toDF("ts", "user")
+      .withWatermark("ts", "0 seconds")
+      .groupBy(session_window(col("ts"), "60 seconds").as("sw"), col("user"))
+      .count()
+    val q = out.writeStream.format("memory").queryName("ssess").outputMode("append").start()
+    // u1: burst {10,40,90} then (gap > 60) burst {300}; u2: one burst
+    // {50,100} — spread over 3 micro-batches so sessions MERGE across
+    // batches (u1's 10–40 batch-1 state extends with 90 in batch 2)
+    val batches = Seq(
+      Seq((10L, "u1"), (40L, "u1"), (50L, "u2")),
+      Seq((90L, "u1"), (100L, "u2")),
+      Seq((300L, "u1")))
+    def sessions(df: org.apache.spark.sql.DataFrame) =
+      df.select($"user", unix_timestamp($"sw.start"), unix_timestamp($"sw.end"),
+        $"count".cast("double"))
+        .as[(String, Long, Long, Double)].collect().toSet
+    try {
+      batches.foreach { b =>
+        mem.addData(b.map { case (s, u) => (at(s), u) })
+        q.processAllAvailable()
+      }
+      mem.addData((at(10000), "uz")) // watermark past every session's close
+      q.processAllAvailable()
+      val streamed = sessions(spark.table("ssess"))
+      // batch reference: static session_window over the same events,
+      // sessions closed by the final watermark
+      val batch = sessions(batches.flatten.map { case (s, u) => (at(s), u) }.toDF("ts", "user")
+        .groupBy(session_window($"ts", "60 seconds").as("sw"), $"user")
+        .count()
+        .filter(unix_timestamp($"sw.end") <= 10000L))
+      assert(streamed == batch,
+        s"missing=${batch -- streamed} extra=${streamed -- batch}")
+      // the cross-batch merge really happened: u1's first session spans
+      // 10→150 (90+gap) with 3 events despite arriving in two batches
+      assert(streamed.contains(("u1", 10L, 150L, 3.0)), s"got $streamed")
+    } finally q.stop()
+  }
 }
