@@ -6,6 +6,7 @@ import java.nio.charset.{CharacterCodingException, Charset, CodingErrorAction}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.{ColumnBridge, ParseMessage}
 import org.apache.spark.sql.types._
 
 /** Ingest edge: raw message bytes → parsed records.
@@ -18,10 +19,14 @@ import org.apache.spark.sql.types._
   *    never fail the pipeline — asserted by
   *    /root/reference/tests/test_pipeline.py:336-350).
   *
-  * The multi-charset fallback is the single irreducible scalar UDF in the
-  * engine (Spark's `decode(col, charset)` takes one fixed charset —
-  * SURVEY.md §4.2). It is confined to this ingest edge so the rest of the
-  * plan stays inside WholeStageCodegen.
+  * The schemaless path parses each message's bytes once, in one expression
+  * ([[parseMessage]]): valid UTF-8 goes to Jackson's byte parser as it is,
+  * and only the other bytes run the charset cascade
+  * ([[decodeMultiCharset]], called directly). The cascade's scalar UDF
+  * ([[decodeMulti]], because Spark's `decode(col, charset)` takes one fixed
+  * charset — SURVEY.md §4.2) remains on the typed path, in
+  * [[decodeCascade]], whose string the typed `from_json` reads. Both stay at
+  * this ingest edge so the rest of the plan stays inside WholeStageCodegen.
   */
 object Ingest {
 
@@ -43,7 +48,8 @@ object Ingest {
     if (bytes == null) null
     else Charsets.iterator.flatMap(decodeStrict(bytes, _)).nextOption().orNull
 
-  /** Scalar UDF wrapper — the only UDF in the core engine.
+  /** Scalar UDF wrapper — the only UDF in the core engine, used by the
+    * typed path's [[decodeCascade]].
     *
     * Deliberately marked nondeterministic (it is NOT — same bytes, same
     * string) as an optimizer barrier: otherwise CollapseProject inlines
@@ -71,27 +77,35 @@ object Ingest {
     when(call_function("is_valid_utf8", raw), decode(raw, "UTF-8"))
       .otherwise(decodeMulti(raw))
 
+  /** Raw message bytes → `map<string,string>`, parsed once per row: the
+    * map `from_json(decodeCascade(raw), map<string,string>)` gives, null
+    * for the documents it rejects (see
+    * `org.apache.spark.sql.graftbridge.ParseMessage`).
+    */
+  def parseMessage(raw: Column): Column =
+    ColumnBridge.column(ParseMessage(ColumnBridge.expression(raw)))
+
   /** Schemaless parity mode: every JSON value stringified into
     * `MapType(String, String)` — mirrors the reference's untyped
     * `msg.get(field)` access (SURVEY.md §1.3). Malformed/undecodable rows
-    * are dropped (`from_json` ⇒ null for broken documents).
+    * are dropped ([[parseMessage]] ⇒ null for broken documents).
     */
   def parseSchemaless(df: DataFrame, rawCol: String, msgCol: String = "msg"): DataFrame =
-    df.withColumn(msgCol, from_json(decodeCascade(col(rawCol)), MapType(StringType, StringType)))
+    df.withColumn(msgCol, parseMessage(col(rawCol)))
       .filter(col(msgCol).isNotNull)
 
   /** Typed mode: user-declared payload schema — enables static filter
     * compilation, pruning and pushdown. Row validity is gated on the
-    * document parsing at all (map-probe), mirroring drop-on-failure; fields
-    * missing from a valid document are null (reference `msg.get` ⇒ None).
+    * document parsing at all ([[parseMessage]] not null), mirroring
+    * drop-on-failure; fields missing from a valid document are null
+    * (reference `msg.get` ⇒ None).
     */
   def parseTyped(df: DataFrame, rawCol: String, schema: StructType, msgCol: String = "msg"): DataFrame =
     // decode ONCE into a named column: two inline decodeMulti(raw) refs
     // would each run the UDF (nondeterministic expressions are exempt from
     // common-subexpression elimination)
     df.withColumn("_graft_dec", decodeCascade(col(rawCol)))
-      .withColumn("_graft_valid",
-        from_json(col("_graft_dec"), MapType(StringType, StringType)).isNotNull)
+      .withColumn("_graft_valid", parseMessage(col(rawCol)).isNotNull)
       .withColumn(msgCol, from_json(col("_graft_dec"), schema))
       .filter(col("_graft_valid"))
       .drop("_graft_valid", "_graft_dec")

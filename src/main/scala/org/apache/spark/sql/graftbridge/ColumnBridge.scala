@@ -6,10 +6,12 @@ import org.apache.spark.sql.classic.ExpressionUtils
 
 /** The one sanctioned crossing into Spark's `private[sql]` surface:
   * Column ↔ Expression converters (`classic.ExpressionUtils`), needed to
-  * build a Column from an expression that carries a NON-LITERAL payload —
-  * [[graft.functions.BloomBitTest]]'s broadcast word array cannot be
-  * spelled through the public FunctionRegistry path, whose builders only
-  * receive child Expressions.
+  * build a Column from an expression that the public FunctionRegistry path,
+  * whose builders only receive child Expressions, cannot spell. Two
+  * expressions carry such a payload:
+  *  - [[graft.functions.BloomBitTest]]: a broadcast word array;
+  *  - [[ParseMessage]] (this package; ingest's parse): a Jackson factory
+  *    built from `JSONOptions`, itself `private[sql]`.
   *
   * Kept deliberately tiny (two forwarders, no logic) so the private-API
   * contact surface is auditable in one screenful; everything else in graft

@@ -243,11 +243,11 @@ class StreamingMetricsSpec extends SparkSpec {
         val plans = queries.map(_.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan)
         def count(f: org.apache.spark.sql.execution.SparkPlan => Int) = plans.map(p => p.collect { case n => f(n) }.sum).sum
         val scans = count(n => if (n.children.isEmpty) 1 else 0)
-        val parses = count(_.expressions.map(_.collect { case e if e.prettyName == "from_json" => e }.size).sum)
+        val parses = count(_.expressions.map(_.collect { case e if e.prettyName == "parse_message" => e }.size).sum)
         val watermarks = count { case _: EventTimeWatermarkExec => 1; case _ => 0 }
         val stores = count { case _: StateStoreSaveExec => 1; case _ => 0 }
         assert((scans, parses, watermarks, stores) == (1, 1, 1, 1),
-          s"$name: (scans, from_json, watermarks, state stores) over ${plans.size} queries:\n${plans.mkString("\n")}")
+          s"$name: (scans, parse_message, watermarks, state stores) over ${plans.size} queries:\n${plans.mkString("\n")}")
       } finally queries.foreach(_.stop())
     }
   }
