@@ -196,17 +196,17 @@ object SparkEntry {
         .orderBy("metric", "w_start")
     },
 
-    // EXT p50 metric type: exact median over the floor-quantized input.
-    // Both engines interpolate the even-count median as (a+b)/2 over
+    // Hourly exact median over the floor-quantized input, in plain Spark:
+    // a median is not one of the core's algebraic metric kinds. Both
+    // engines interpolate the even-count median as (a+b)/2 over
     // integer-valued doubles — every intermediate is representable, so the
     // result is bit-exact cross-engine (same argument as q_metric_avg).
     "q_metric_p50" -> { (s, dir) =>
-      val df = ev(s, dir)
+      ev(s, dir)
         .withColumn("value_q3", floor(col("value") * 1000).cast("double"))
-      val defs = Seq(MetricDefinition("v_p50", MetricType.P50("value_q3"), windowSizeSec = 3600))
-      LogsToMetrics(defs, LogsToMetrics.Typed(df.schema))(df)
-        .select(col("metric"), secs(col("window_start")).as("w_start"),
-          col("value").as("value_q3_p50"))
+        .groupBy(window(col("ts"), "3600 seconds").as("w"))
+        .agg(percentile(col("value_q3"), lit(0.5)).as("value_q3_p50"))
+        .select(lit("v_p50").as("metric"), secs(col("w.start")).as("w_start"), col("value_q3_p50"))
         .orderBy("metric", "w_start")
     },
 

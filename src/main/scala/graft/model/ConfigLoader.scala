@@ -16,10 +16,10 @@ import com.fasterxml.jackson.dataformat.yaml.YAMLFactory
   * {{{
   * metrics:
   *   - name: my-metric            # required
-  *     type: count | sum | min | max | avg | p50   # required; all but
-  *                                # count require `field` (min/max/avg/p50
-  *                                # are EXT beyond the reference's two)
-  *     field: bytes               # sum source field
+  *     type: count | sum | min | max | avg   # required; all but count
+  *                                # require `field` (min/max/avg are EXT
+  *                                # beyond the reference's two)
+  *     field: bytes               # sum/min/max/avg source field
   *     labels: {k: v}             # static labels (required, as in reference)
   *     dynamic_labels: {k: fld}   # optional
   *     filter-conditions:         # required list (may be empty ⇒ match-all)

@@ -46,6 +46,8 @@ object FilterOps {
 /** count | sum, as in /root/reference/beametrics/metrics.py:8-12. Sum
   * carries the field it aggregates; SUM-requires-field is enforced at
   * construction (reference: /root/reference/beametrics/metrics.py:24-32).
+  * Every kind, min/max/avg included, is algebraic: one fixed buffer (sum,
+  * min, max, count) serves them all.
   */
 sealed trait MetricType
 object MetricType {
@@ -65,24 +67,6 @@ object MetricType {
     require(field != null && field.nonEmpty, "field is required when metric_type is avg")
   }
 
-  /** Exact median (latency-style metric). Unlike the algebraic aggregates
-    * above, the median buffers the window's values per group — the engine
-    * only pays that cost (ObjectHashAggregate instead of codegen
-    * HashAggregate) for fan-outs that actually declare a p50 metric.
-    */
-  final case class P50(field: String) extends MetricType {
-    require(field != null && field.nonEmpty, "field is required when metric_type is p50")
-  }
-
-  /** Approximate median — the 100 TB percentile: `percentile_approx`'s
-    * quantile summary keeps BOUNDED per-group state (vs the exact
-    * median's full value buffer) and merges across partials, at a
-    * documented rank-error `accuracy` (1/accuracy relative rank error).
-    */
-  final case class P50Approx(field: String, accuracy: Int = 10000) extends MetricType {
-    require(field != null && field.nonEmpty, "field is required when metric_type is p50_approx")
-    require(accuracy > 0, "accuracy must be positive")
-  }
   def parse(metricType: String, field: Option[String]): MetricType = {
     val t = metricType.toLowerCase
     def f = {
@@ -95,11 +79,9 @@ object MetricType {
       case "min" => Min(f)
       case "max" => Max(f)
       case "avg" => Avg(f)
-      case "p50" => P50(f)
-      case "p50_approx" => P50Approx(f)
       case other =>
         throw new IllegalArgumentException(
-          s"Unsupported metric type: $other (must be count, sum, min, max, avg, p50 or p50_approx)")
+          s"Unsupported metric type: $other (must be count, sum, min, max or avg)")
     }
   }
 }

@@ -22,11 +22,11 @@ import org.apache.spark.sql.types._
   *    hash-partial aggregation runs before the only exchange — Beam's
   *    combiner lifting ≡ Spark partial+final HashAggregate.
   *  - Everything a definition fixes at plan time (window size, kind,
-  *    percentile gating, metric name, label keys, static labels) is read
-  *    from literal arrays indexed by id, so the name and static labels are
-  *    attached after the aggregation and never cross the shuffle or sit in
-  *    streaming state. Per-row work is one CASE over the DISTINCT dynamic
-  *    label field lists and value expressions, not over the N definitions.
+  *    metric name, label keys, static labels) is read from literal arrays
+  *    indexed by id, so the name and static labels are attached after the
+  *    aggregation and never cross the shuffle or sit in streaming state.
+  *    Per-row work is one CASE over the DISTINCT dynamic label field lists
+  *    and value expressions, not over the N definitions.
   *  - Why ids and not per-definition structs: an `explode(filter(array(N
   *    structs), _ IS NOT NULL))` fan-out puts `ArrayFilter`, a
   *    `CodegenFallback` higher-order function, under the `Generate`; the
@@ -206,8 +206,6 @@ object LogsToMetrics {
         s"slide of $slide s is longer than the ${d.effectiveWindowSizeSec} s window of definition ${d.name}"))
       defs.exists(_.effectiveWindowSizeSec != slide)
     }.map(_ * 1000000L)
-    private val pctl = pctlPlan(defs)
-    private val aggregates = aggValues(pctl)
 
     /** Sorted label entries per definition: Left(static value) or
       * Right(message field); dynamic wins on a key conflict (pipeline.py:198).
@@ -296,8 +294,7 @@ object LogsToMetrics {
       }.reduce(_ || _)
 
     /** One row per (input row, matching definition, window end): `_wend`,
-      * `_f` (the family id), the per-row label values, `value` and the
-      * percentile inputs.
+      * `_f` (the family id), the per-row label values and `value`.
       */
     private def rows(df: DataFrame, tsCol: String): DataFrame = {
       // Each distinct condition is evaluated once per row, into one bit of
@@ -318,12 +315,6 @@ object LogsToMetrics {
       val d = col("_d")
       val listOf = at(rowLabels.map(labelLists.indexOf), d)
       val value = pick(at(values.map(distinctValues.indexOf), d), distinctValues.map(Some(_)))
-      // pval/pval_a: buffered ONLY by their percentile aggregate — null
-      // for every other definition, so those groups buffer nothing
-      val kind = at(defs.map(x => aggKind(x.metricType)), d)
-      val pvals =
-        (if (pctl.withExact) Seq(when(kind === 4, value).as("pval")) else Nil) ++
-          (if (pctl.approxAccuracy.nonEmpty) Seq(when(kind === 5, value).as("pval_a")) else Nil)
       // a row without an event time has no window and makes no point; on
       // a stream this filter reads the event time, so Spark keeps it above
       // the watermark
@@ -332,8 +323,7 @@ object LogsToMetrics {
       val micros = unix_micros(col(tsCol))
       val size = at(familyOf.map(windowMicrosOf), d)
       val perRow = Seq(at(familyOf.map(familyIds), d).as("_f"), value.as("value")) ++
-        (0 until labelWidth).map(j => pick(listOf, labelLists.map(_.lift(j))).as(s"_l$j")) ++
-        pvals
+        (0 until labelWidth).map(j => pick(listOf, labelLists.map(_.lift(j))).as(s"_l$j"))
       val matched = in.select(col("*") +: words: _*)
         .select(col("*"), explode(array(ids: _*)).as("_d"))
         .filter(d.isNotNull)
@@ -363,8 +353,13 @@ object LogsToMetrics {
     private def metric: Column = at(representative.map(defs(_).name), col("_f"))
     private def windowMicros: Column = at(families.indices.map(windowMicrosOf), col("_f"))
     private def windowMicrosOf(f: Int): Long = defs(representative(f)).effectiveWindowSizeSec * 1000000L
-    private def value: Column =
-      finalValue(pctl, at(representative.map(i => aggKind(defs(i).metricType)), col("_f")))
+    private def value: Column = {
+      val kind = at(representative.map(i => aggKind(defs(i).metricType)), col("_f"))
+      when(kind === 0, col("_sum"))
+        .when(kind === 1, col("_min"))
+        .when(kind === 2, col("_max"))
+        .otherwise(col("_sum") / col("_cnt")) // kind 3 = avg
+    }
 
     /** The family's label map in key order: constants from a literal array,
       * per-row keys from `_l0`, `_l1`, …; one map shape per distinct layout.
@@ -421,60 +416,25 @@ object LogsToMetrics {
     fo.points(df.filter(fo.anyMatch), tsCol)
   }
 
-  /** Which percentile aggregates this fan-out needs: exact median and/or
-    * approx median (at the MAX declared accuracy — a summary built at
-    * higher accuracy satisfies every lower-accuracy request).
-    */
-  private final case class PctlPlan(withExact: Boolean, approxAccuracy: Option[Int])
-
-  private def pctlPlan(defs: Seq[MetricDefinition]): PctlPlan = PctlPlan(
-    withExact = defs.exists(_.metricType match {
-      case MetricType.P50(_) => true
-      case _ => false
-    }),
-    approxAccuracy = defs
-      .collect { case d if d.metricType.isInstanceOf[MetricType.P50Approx] =>
-        d.metricType.asInstanceOf[MetricType.P50Approx].accuracy
-      }
-      .reduceOption(_ max _))
-
-  /** 0 = sum-like (count is sum of 1s), 1 = min, 2 = max, 3 = avg,
-    * 4 = p50 (exact), 5 = p50 (approx).
+  /** 0 = sum-like (count is sum of 1s), 1 = min, 2 = max, 3 = avg. The
+    * number is part of each family's id, so it must not change.
     */
   private def aggKind(t: MetricType): Int = t match {
     case MetricType.Count | MetricType.Sum(_) => 0
     case MetricType.Min(_)                    => 1
     case MetricType.Max(_)                    => 2
     case MetricType.Avg(_)                    => 3
-    case MetricType.P50(_)                    => 4
-    case MetricType.P50Approx(_, _)           => 5
   }
 
-  /** One pass computes all partial aggregates; kind picks the result.
-    * The percentile aggregates are included ONLY when some config needs
-    * them: both `percentile` (full buffer) and `percentile_approx`
-    * (bounded quantile summary) are TypedImperativeAggregates, and their
-    * mere presence downgrades the whole aggregation from codegen
-    * HashAggregate to ObjectHashAggregate — count/sum-only fan-outs must
-    * not pay that.
+  /** The aggregation buffer of every kind: all algebraic, so the plan is
+    * one codegen HashAggregate and the streaming state value is the same
+    * four columns for every config.
     */
-  private def aggValues(pp: PctlPlan): Seq[Column] = Seq(
+  private val aggregates: Seq[Column] = Seq(
     sum(col("value")).as("_sum"),
     min(col("value")).as("_min"),
     max(col("value")).as("_max"),
-    count(col("value")).as("_cnt")) ++
-    (if (pp.withExact) Seq(percentile(col("pval"), lit(0.5)).as("_p50")) else Nil) ++
-    pp.approxAccuracy.map(acc =>
-      percentile_approx(col("pval_a"), lit(0.5), lit(acc)).as("_p50a")).toSeq
-
-  private def finalValue(pp: PctlPlan, kind: Column): Column = {
-    var c = when(kind === 0, col("_sum"))
-      .when(kind === 1, col("_min"))
-      .when(kind === 2, col("_max"))
-    if (pp.withExact) c = c.when(kind === 4, col("_p50"))
-    if (pp.approxAccuracy.nonEmpty) c = c.when(kind === 5, col("_p50a"))
-    c.otherwise(col("_sum") / col("_cnt")) // kind 3 = avg
-  }
+    count(col("value")).as("_cnt"))
 
   private def valueCol(d: MetricDefinition, mode: Mode): Column = d.metricType match {
     case MetricType.Count => lit(1.0)
@@ -482,7 +442,5 @@ object LogsToMetrics {
     case MetricType.Min(field) => mode.numValue(field)
     case MetricType.Max(field) => mode.numValue(field)
     case MetricType.Avg(field) => mode.numValue(field)
-    case MetricType.P50(field) => mode.numValue(field)
-    case MetricType.P50Approx(field, _) => mode.numValue(field)
   }
 }

@@ -63,8 +63,8 @@ object MetricsSink {
 
   /** Shape a LogsToMetrics/StreamingMetrics output frame into exportable
     * point rows (`window_end` is the reference's point timestamp — the
-    * window close). A point without a value — a min/max/avg/p50 group
-    * whose rows all lack the field — is dropped here, so no export path
+    * window close). A point without a value — a min/max/avg group whose
+    * rows all lack the field — is dropped here, so no export path
     * reads a null `value`.
     */
   def formatted(df: DataFrame, metricNamePrefix: String = ""): DataFrame =

@@ -7,7 +7,6 @@ import graft.streaming.StreamingMetrics
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** The reference's unbounded-source path against a REAL directory-watching
   * file source (`binaryFile` stream): each file's raw bytes are one
@@ -20,11 +19,6 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   */
 class FileStreamSpec extends SparkSpec {
 
-  private val PayloadSchema = StructType(Seq(
-    StructField("severity", StringType),
-    StructField("message", StringType),
-    StructField("ts_sec", LongType)))
-
   /** binaryFile dir stream → decode/parse → (ts, severity, message).
     * Streaming file sources require an explicit schema; the literal one
     * here is binaryFile's fixed source schema.
@@ -35,10 +29,11 @@ class FileStreamSpec extends SparkSpec {
       .schema("path STRING, modificationTime TIMESTAMP, length BIGINT, content BINARY")
       .load(dir)
       .select(col("content").as("raw"))
+    def field(name: String) = try_element_at(col("msg"), lit(name))
     Ingest
-      .parseTyped(raw, "raw", PayloadSchema) // malformed payloads drop here
-      .select(timestamp_seconds(col("msg.ts_sec")).as("ts"),
-        col("msg.severity").as("severity"), col("msg.message").as("message"))
+      .parseSchemaless(raw, "raw") // malformed payloads drop here
+      .select(timestamp_seconds(field("ts_sec").try_cast("long")).as("ts"),
+        field("severity").as("severity"), field("message").as("message"))
   }
 
   private val ErrorCount = Seq(MetricDefinition(

@@ -16,12 +16,6 @@ class IngestSpec extends SparkSpec {
   import spark.implicits._
   import IngestSpec._
 
-  /** Flatten a parsed struct payload to top-level columns, keeping extras. */
-  private def flattened(df: org.apache.spark.sql.DataFrame, msgCol: String = "msg") = {
-    val others = df.columns.filterNot(_ == msgCol).map(col)
-    df.select(others :+ col(s"$msgCol.*"): _*)
-  }
-
   test("charset cascade decodes shift-jis after utf-8 fails (pipeline.py:86-96)") {
     val jp = """{"msg": "テスト"}"""
     val sjis = jp.getBytes("Shift_JIS")
@@ -70,24 +64,6 @@ class IngestSpec extends SparkSpec {
     assert(out.count() == 1)
     val m = out.select("msg").collect().head.getMap[String, String](0).toMap
     assert(m == Map("a" -> "1", "b" -> "x"))
-  }
-
-  test("parseTyped declares fields; missing fields are null, malformed dropped") {
-    val schema = StructType(Seq(
-      StructField("severity", StringType), StructField("bytes", DoubleType)))
-    val df = Seq(
-      """{"severity": "ERROR", "bytes": 10}""".getBytes("UTF-8"),
-      """{"severity": "WARN"}""".getBytes("UTF-8"),
-      "garbage".getBytes("UTF-8")
-    ).toDF("raw")
-    val out = Ingest.parseTyped(df, "raw", schema)
-    assert(out.count() == 2)
-    val rows = flattened(out)
-      .select($"severity", $"bytes")
-      .collect()
-      .map(r => (r.getString(0), Option(r.get(1))))
-      .toSet
-    assert(rows == Set(("ERROR", Some(10.0)), ("WARN", None)))
   }
 
   test("parseSchemaless ≡ from_json(decodeCascade(raw), map<string,string>) on edge cases and generated documents") {

@@ -3,7 +3,10 @@ package graft
 import graft.model._
 import graft.pipeline.LogsToMetrics
 import graft.sinks.{MetricPoint, MetricsSink}
+import graft.streaming.StreamingMetrics
 import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.sql.functions._
 
 /** Core transform semantics mirrored from the reference pipeline tests
@@ -115,67 +118,42 @@ class LogsToMetricsSpec extends SparkSpec {
   }
 
   test("min/max/avg metric types; missing values excluded, not zeroed") {
-    val df = Seq(
-      ("a", at(10), "5"), ("b", at(20), "15"), ("c", at(30), "not_num"), ("d", at(40), null)
-    ).toDF("id", "ts", "v")
+    val rows = Seq(("a", at(10), "5"), ("b", at(20), "15"), ("c", at(30), "not_num"), ("d", at(40), null))
+    val df = rows.toDF("id", "ts", "v")
+    // every kind in one fan-out
     val defs = Seq(
+      MetricDefinition("ct", MetricType.Count, windowSizeSec = 3600),
       MetricDefinition("mn", MetricType.Min("v"), windowSizeSec = 3600),
       MetricDefinition("mx", MetricType.Max("v"), windowSizeSec = 3600),
       MetricDefinition("av", MetricType.Avg("v"), windowSizeSec = 3600),
       MetricDefinition("sm", MetricType.Sum("v"), windowSizeSec = 3600))
-    val out = LogsToMetrics(defs, LogsToMetrics.Typed(df.schema))(df)
-      .select($"metric", $"value").as[(String, Double)].collect().toMap
-    assert(out("mn") == 5.0)
-    assert(out("mx") == 15.0)
-    assert(out("av") == 10.0) // (5+15)/2 — nulls excluded from the mean
-    assert(out("sm") == 20.0) // sum: unparsable/missing contribute 0
-  }
+    val want = Map("ct" -> 4.0, "mn" -> 5.0, "mx" -> 15.0,
+      "av" -> 10.0, // (5+15)/2 — nulls excluded from the mean
+      "sm" -> 20.0) // sum: unparsable/missing contribute 0
+    // every kind is algebraic: the aggregation stays a codegen
+    // HashAggregate, never the ObjectHashAggregate of a buffering aggregate
+    def assertHashAggregate(plan: SparkPlan): Unit = {
+      val p = plan.toString
+      assert(p.contains("HashAggregate") && !p.contains("ObjectHashAggregate"), s"codegen HashAggregate only:\n$p")
+    }
 
-  test("p50 metric: exact median in the shared pass, buffering only when declared") {
-    val df = Seq(
-      ("a", at(10), "1"), ("b", at(20), "9"), ("c", at(30), "5"),
-      ("d", at(40), "7"), ("e", at(50), null)
-    ).toDF("id", "ts", "v")
-    val defs = Seq(
-      MetricDefinition("p", MetricType.P50("v"), windowSizeSec = 3600),
-      MetricDefinition("c", MetricType.Count, windowSizeSec = 3600))
-    val out = LogsToMetrics(defs, LogsToMetrics.Typed(df.schema))(df)
-      .select($"metric", $"value").as[(String, Double)].collect().toMap
-    assert(out("p") == 6.0) // sorted {1,5,7,9}, even count → (5+7)/2; null excluded
-    assert(out("c") == 5.0)
+    val batch = LogsToMetrics(defs, LogsToMetrics.Typed(df.schema))(df)
+    assert(batch.select($"metric", $"value").as[(String, Double)].collect().toMap == want)
+    assertHashAggregate(batch.queryExecution.executedPlan)
 
-    // a p50-free fan-out must keep the codegen HashAggregate: percentile's
-    // mere presence would downgrade the whole agg to ObjectHashAggregate
-    val noP50 = LogsToMetrics(
-      Seq(MetricDefinition("c2", MetricType.Count, windowSizeSec = 60)),
-      LogsToMetrics.Typed(df.schema))(df)
-    val plan = noP50.queryExecution.executedPlan.toString
-    assert(!plan.contains("ObjectHashAggregate"), s"count-only agg must stay codegen:\n$plan")
-    val withP50 = LogsToMetrics(defs, LogsToMetrics.Typed(df.schema))(df)
-    assert(withP50.queryExecution.executedPlan.toString.contains("ObjectHashAggregate"))
-  }
-
-  test("p50_approx metric: bounded-state median tracks exact, gated like p50") {
-    // 101 values 0..100 → exact median 50; percentile_approx at default
-    // accuracy is exact on inputs far smaller than the summary bound
-    val rows = (0 to 100).map(i => (s"r$i", at(10 + i), i.toString))
-    val df = rows.toDF("id", "ts", "v")
-    val defs = Seq(
-      MetricDefinition("pa", MetricType.P50Approx("v"), windowSizeSec = 3600),
-      MetricDefinition("p", MetricType.P50("v"), windowSizeSec = 3600),
-      MetricDefinition("c", MetricType.Count, windowSizeSec = 3600))
-    val out = LogsToMetrics(defs, LogsToMetrics.Typed(df.schema))(df)
-      .select($"metric", $"value").as[(String, Double)].collect().toMap
-    assert(out("p") == 50.0)
-    assert(math.abs(out("pa") - out("p")) <= 1.0,
-      s"approx median ${out("pa")} must track exact ${out("p")}")
-    assert(out("c") == 101.0)
-    // approx-only fan-outs also gate: count-only stays codegen (covered by
-    // the p50 test); an approx-only fan-out pays ObjectHashAggregate
-    val approxOnly = LogsToMetrics(
-      Seq(MetricDefinition("pa2", MetricType.P50Approx("v"), windowSizeSec = 60)),
-      LogsToMetrics.Typed(df.schema))(df)
-    assert(approxOnly.queryExecution.executedPlan.toString.contains("ObjectHashAggregate"))
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[(String, java.sql.Timestamp, String)]
+    val stream = mem.toDF.toDF("id", "ts", "v")
+    val Seq(out) = StreamingMetrics.attach(stream, defs, LogsToMetrics.Typed(stream.schema))
+    val q = out.writeStream.format("memory").queryName("all_kinds").outputMode("append").start()
+    try {
+      // the window's rows in two micro-batches, then one that closes it
+      mem.addData(rows.take(2)); q.processAllAvailable()
+      mem.addData(rows.drop(2)); q.processAllAvailable()
+      mem.addData(("e", at(7200), "1")); q.processAllAvailable()
+      assert(spark.table("all_kinds").select($"metric", $"value").as[(String, Double)].collect().toMap == want)
+      assertHashAggregate(q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan)
+    } finally q.stop()
   }
 
   test("per-config window sizes coexist in one pass") {
@@ -224,8 +202,7 @@ class LogsToMetricsSpec extends SparkSpec {
     }.toDF("ts", "msg")
 
     val kinds = Seq(MetricType.Count, MetricType.Sum("bytes"), MetricType.Min("rt"),
-      MetricType.Max("rt"), MetricType.Avg("bytes"), MetricType.P50("rt"),
-      MetricType.P50Approx("bytes"))
+      MetricType.Max("rt"), MetricType.Avg("bytes"))
     val shapes: Seq[(Map[String, String], Map[String, String])] = Seq(
       (Map.empty, Map.empty),                                  // no labels
       (Map("env" -> "t"), Map.empty),                          // static only
@@ -241,7 +218,9 @@ class LogsToMetricsSpec extends SparkSpec {
       Seq(FilterCondition("severity", "WARN", "equals")))
     val defs = (0 until 70).map { i =>
       val (static, dynamic) = shapes(i % shapes.size)
-      MetricDefinition(f"m$i%02d", kinds(i % kinds.size), filters(i % filters.size),
+      // kinds and filters both number five: the kind moves on every fifth
+      // definition, so each kind meets each filter and window size
+      MetricDefinition(f"m$i%02d", kinds(i / filters.size % kinds.size), filters(i % filters.size),
         static, dynamic, if (i % 5 < 3) 10 else 60)
     } ++ Seq(
       // same name, window and labels: one merged point per window
@@ -299,22 +278,18 @@ class LogsToMetricsSpec extends SparkSpec {
         case MetricType.Min(f)                 => ("min", mode.numValue(f))
         case MetricType.Max(f)                 => ("max", mode.numValue(f))
         case MetricType.Avg(f)                 => ("avg", mode.numValue(f))
-        case MetricType.P50(f)                 => ("p50", mode.numValue(f))
-        case MetricType.P50Approx(f, _)        => ("p50a", mode.numValue(f))
       }
       df.filter(mode.pred(d.filters)).select(lit(d.name).as("metric"), lit(kind).as("kind"),
         lit(size).as("size"), (micros - pmod(micros, lit(size))).as("ws"), labels.as("labels"),
         value.as("v"))
     }.reduce(_ unionByName _)
       .groupBy("metric", "kind", "size", "ws", "labels")
-      .agg(sum("v").as("sum"), min("v").as("min"), max("v").as("max"), avg("v").as("avg"),
-        percentile($"v", lit(0.5)).as("p50"), percentile_approx($"v", lit(0.5), lit(10000)).as("p50a"))
+      .agg(sum("v").as("sum"), min("v").as("min"), max("v").as("max"), avg("v").as("avg"))
       .select($"metric", timestamp_micros($"ws").as("window_start"),
         timestamp_micros($"ws" + $"size").as("window_end"),
         map_from_entries($"labels").as("labels"),
         when($"kind" === "sum", $"sum").when($"kind" === "min", $"min")
-          .when($"kind" === "max", $"max").when($"kind" === "avg", $"avg")
-          .when($"kind" === "p50", $"p50").otherwise($"p50a").as("value"))
+          .when($"kind" === "max", $"max").otherwise($"avg").as("value"))
   }
 }
 

@@ -19,6 +19,11 @@ class ModelSpec extends AnyFunSuite {
 
   test("unsupported metric type rejected (test_main.py:176-194)") {
     intercept[IllegalArgumentException](MetricType.parse("median", Some("x")))
+    // medians are not a kind: every kind shares one algebraic buffer
+    for (t <- Seq("p50", "p50_approx")) {
+      val e = intercept[IllegalArgumentException](MetricType.parse(t, Some("x")))
+      assert(e.getMessage == s"Unsupported metric type: $t (must be count, sum, min, max or avg)")
+    }
     // EXT types beyond the reference's count|sum parse with a field
     assert(MetricType.parse("min", Some("v")) == MetricType.Min("v"))
     assert(MetricType.parse("max", Some("v")) == MetricType.Max("v"))

@@ -34,29 +34,8 @@ class StreamingMetricsSpec extends SparkSpec {
 
   private def at(sec: Long): java.sql.Timestamp = new java.sql.Timestamp(sec * 1000L)
 
-  test("p50_approx works in streaming aggregation (summary state survives the store)") {
-    // percentile_approx is a TypedImperativeAggregate — its quantile
-    // summary must serialize into (and merge out of) streaming state
-    // across micro-batches; this pins that the SURVEY claim holds e2e
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(java.sql.Timestamp, Double)]
-    val typed = mem.toDF.toDF("ts", "v")
-    val pdefs = Seq(
-      MetricDefinition("lat_p50", MetricType.P50Approx("v"), windowSizeSec = 60))
-    val Seq(out) = StreamingMetrics.attach(typed, pdefs, LogsToMetrics.Typed(typed.schema))
-    val q = out.writeStream.format("memory").queryName("sp50a").outputMode("append").start()
-    try {
-      // window [60,120): values across TWO micro-batches → state merge
-      mem.addData((at(65), 1.0), (at(70), 9.0))
-      q.processAllAvailable()
-      mem.addData((at(80), 5.0))
-      mem.addData((at(200), 0.0)) // advance watermark, close the window
-      q.processAllAvailable()
-      val vals = spark.table("sp50a").select($"value").as[Double].collect()
-      assert(vals.length == 1 && vals.head == 5.0,
-        s"median of {1,9,5} across micro-batches must be 5.0, got ${vals.toSeq}")
-    } finally q.stop()
-  }
+  /** A field of the parsed message map; null when missing. */
+  private def field(name: String) = try_element_at(col("msg"), lit(name))
 
   test("TIMESTAMP_NTZ event-time streams window identically (normalized before the watermark)") {
     // Spark rejects NTZ watermark columns ([EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE]);
@@ -195,26 +174,6 @@ class StreamingMetricsSpec extends SparkSpec {
       q.processAllAvailable()
       val vals = spark.table("avg_stream").select($"value").as[Double].collect().toList
       assert(vals == List(20.0)) // (10+30)/2 — missing-field row excluded
-    } finally q.stop()
-  }
-
-  test("p50 metric type aggregates across micro-batches (buffering state merges)") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(java.sql.Timestamp, Array[Byte])]
-    val parsed = Ingest.parseSchemaless(mem.toDF.toDF("ts", "raw"), "raw")
-    val Seq(out) = StreamingMetrics.attach(
-      parsed,
-      Seq(MetricDefinition("p50_bytes", MetricType.P50("bytes"), windowSizeSec = 60)),
-      LogsToMetrics.Schemaless("msg"))
-    val q = out.writeStream.format("memory").queryName("p50_stream").outputMode("append").start()
-    try {
-      mem.addData((at(10), msg("ERROR", 1).getBytes("UTF-8")))
-      mem.addData((at(20), msg("ERROR", 9).getBytes("UTF-8")),
-        (at(30), msg("ERROR", 5).getBytes("UTF-8")))
-      mem.addData((at(200), msg("ERROR", 0).getBytes("UTF-8")))
-      q.processAllAvailable()
-      val vals = spark.table("p50_stream").select($"value").as[Double].collect().toList
-      assert(vals == List(5.0)) // median of {1,9,5} buffered across batches
     } finally q.stop()
   }
 
@@ -381,11 +340,6 @@ class StreamingMetricsSpec extends SparkSpec {
   test("exactly-once e2e: crash between export and epoch commit, restart, no double-emit") {
     import java.nio.file.{Files, Paths}
     import graft.sinks.MetricsSink
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("severity",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("ts_sec",
-        org.apache.spark.sql.types.LongType)))
     val errCount = Seq(MetricDefinition(
       "error_count", MetricType.Count,
       Seq(FilterCondition("severity", "ERROR", "equals")), windowSizeSec = 60))
@@ -394,9 +348,8 @@ class StreamingMetricsSpec extends SparkSpec {
       val raw = spark.readStream.format("binaryFile")
         .schema("path STRING, modificationTime TIMESTAMP, length BIGINT, content BINARY")
         .load(inDir).select(col("content").as("raw"))
-      val parsed = Ingest.parseTyped(raw, "raw", schema)
-        .select(timestamp_seconds(col("msg.ts_sec")).as("ts"),
-          col("msg.severity").as("severity"))
+      val parsed = Ingest.parseSchemaless(raw, "raw")
+        .select(timestamp_seconds(field("ts_sec").try_cast("long")).as("ts"), field("severity").as("severity"))
       val Seq(out) = StreamingMetrics.attach(parsed, errCount, LogsToMetrics.Typed(parsed.schema))
       out
     }
@@ -489,10 +442,7 @@ class StreamingMetricsSpec extends SparkSpec {
   private def afterRestart(before: Seq[MetricDefinition], after: Seq[MetricDefinition]): Set[(String, Long, Double)] = {
     import java.nio.file.{Files, Paths}
     import org.apache.spark.sql.{Dataset, Row}
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     import scala.jdk.CollectionConverters._
-    val schema = StructType(Seq(StructField("severity", StringType), StructField("user", StringType),
-      StructField("ts_sec", LongType)))
     val in = Files.createTempDirectory("restart-in").toString
     val ckpt = Files.createTempDirectory("restart-ck").toString
     def write(name: String, sev: String, tsSec: Long): Unit =
@@ -502,8 +452,9 @@ class StreamingMetricsSpec extends SparkSpec {
       val raw = spark.readStream.format("binaryFile")
         .schema("path STRING, modificationTime TIMESTAMP, length BIGINT, content BINARY")
         .load(in).select(col("content").as("raw"))
-      val parsed = Ingest.parseTyped(raw, "raw", schema)
-        .select(timestamp_seconds($"msg.ts_sec").as("ts"), $"msg.severity".as("severity"), $"msg.user".as("user"))
+      val parsed = Ingest.parseSchemaless(raw, "raw")
+        .select(timestamp_seconds(field("ts_sec").try_cast("long")).as("ts"), field("severity").as("severity"),
+          field("user").as("user"), field("ts_sec").try_cast("long").as("ts_sec"))
       val Seq(out) = StreamingMetrics.attach(parsed, defs, LogsToMetrics.Typed(parsed.schema))
       val q = out.writeStream.option("checkpointLocation", ckpt).outputMode("append")
         .foreachBatch { (df: Dataset[Row], _: Long) =>
@@ -533,6 +484,15 @@ class StreamingMetricsSpec extends SparkSpec {
 
   test("restart with a definition removed drops its in-flight window, not another metric's") {
     assert(afterRestart(Seq(aErrors, bInfos), Seq(bInfos)) == Set(("b_infos", 0L, 1.0)))
+  }
+
+  test("restart with min, max and avg definitions added keeps the in-flight counts") {
+    // the state value is the same four aggregates for every kind
+    val added = Seq(
+      MetricDefinition("d_min", MetricType.Min("ts_sec"), windowSizeSec = 60),
+      MetricDefinition("d_max", MetricType.Max("ts_sec"), windowSizeSec = 60),
+      MetricDefinition("d_avg", MetricType.Avg("ts_sec"), windowSizeSec = 60))
+    assert(afterRestart(Seq(aErrors, bInfos), aErrors +: bInfos +: added) == closedWindow)
   }
 
   test("restart with a widened dynamic-label key fails on the state schema") {

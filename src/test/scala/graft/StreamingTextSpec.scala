@@ -108,8 +108,7 @@ class StreamingTextSpec extends SparkSpec {
 
   test("graft_topk works in streaming aggregation (SpaceSaving state survives the store)") {
     // the native TypedImperativeAggregate must serialize into (and merge
-    // out of) streaming state across micro-batches — the same e2e claim
-    // StreamingMetricsSpec pins for percentile_approx
+    // out of) streaming state across micro-batches
     implicit val sqlCtx = spark.sqlContext
     graft.functions.GraftFunctions.register(spark)
     import org.apache.spark.sql.functions._
