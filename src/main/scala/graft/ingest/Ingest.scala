@@ -6,7 +6,7 @@ import java.nio.charset.{CharacterCodingException, Charset, CodingErrorAction}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.{ColumnBridge, ParseMessage}
+import org.apache.spark.sql.graftbridge.{ColumnBridge, ParseMessage, PlanBridge}
 
 /** Ingest edge: raw message bytes → parsed records.
   *
@@ -88,9 +88,11 @@ object Ingest {
   /** Schemaless parity mode: every JSON value stringified into
     * `MapType(String, String)` — mirrors the reference's untyped
     * `msg.get(field)` access (SURVEY.md §1.3). Malformed/undecodable rows
-    * are dropped ([[parseMessage]] ⇒ null for broken documents).
+    * are dropped ([[parseMessage]] ⇒ null for broken documents). Both
+    * steps are built over a stand-in for `df` (`PlanBridge.overInput`),
+    * so `df`'s plan is analyzed once, not once per step.
     */
   def parseSchemaless(df: DataFrame, rawCol: String, msgCol: String = "msg"): DataFrame =
-    df.withColumn(msgCol, parseMessage(col(rawCol)))
-      .filter(col(msgCol).isNotNull)
+    PlanBridge.overInput(df)(
+      _.withColumn(msgCol, parseMessage(col(rawCol))).filter(col(msgCol).isNotNull))
 }

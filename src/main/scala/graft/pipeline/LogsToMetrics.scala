@@ -3,6 +3,7 @@ package graft.pipeline
 import graft.model.{FilterCondition, FilterOps, MetricDefinition, MetricType}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 import org.apache.spark.sql.types._
 
 /** The core transform: N metric definitions over one record stream →
@@ -49,6 +50,10 @@ import org.apache.spark.sql.types._
   *  - Labels are canonicalized at *plan time*: keys are sorted once per
   *    definition family (the reference sorts label tuples at runtime per
   *    element, pipeline.py:172) and the output map is built in key order.
+  *  - The plan is built once per call, as the reference builds its graph
+  *    once (pipeline.py:164-186): the batch transform's dozen DataFrame
+  *    steps are built over a stand-in for the input, and the input's plan,
+  *    however large, is analyzed with them once (`PlanBridge.overInput`).
   *
   * Value semantics (pipeline.py:200-208): COUNT ⇒ 1.0 per row; SUM ⇒
   * `float(msg.get(field, 0))`, missing field ⇒ 0. Divergence (documented,
@@ -410,10 +415,14 @@ object LogsToMetrics {
     java.nio.ByteBuffer.wrap(md.digest()).getLong
   }
 
+  /** The batch transform: the OR gate, then [[FanOut.points]]. Its steps
+    * are built over a stand-in for `df` (`PlanBridge.overInput`), so
+    * `df`'s plan is analyzed once, not once per step.
+    */
   def apply(defs: Seq[MetricDefinition], mode: Mode, tsCol: String = "ts")(
       df: DataFrame): DataFrame = {
     val fo = new FanOut(defs, mode)
-    fo.points(df.filter(fo.anyMatch), tsCol)
+    PlanBridge.overInput(df)(in => fo.points(in.filter(fo.anyMatch), tsCol))
   }
 
   /** 0 = sum-like (count is sum of 1s), 1 = min, 2 = max, 3 = avg. The

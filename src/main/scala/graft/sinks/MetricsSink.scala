@@ -3,6 +3,7 @@ package graft.sinks
 import graft.model.ExportTarget
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 /** Export layer — re-expresses the reference's exporter stack
   * (/root/reference/beametrics/metrics_exporter.py:65-220,
@@ -65,39 +66,48 @@ object MetricsSink {
     * point rows (`window_end` is the reference's point timestamp — the
     * window close). A point without a value — a min/max/avg group whose
     * rows all lack the field — is dropped here, so no export path
-    * reads a null `value`.
+    * reads a null `value`. Built over a stand-in for `df`
+    * (`PlanBridge.overInput`), so `df`'s plan is analyzed once.
     */
   def formatted(df: DataFrame, metricNamePrefix: String = ""): DataFrame =
-    df.filter(col("value").isNotNull).select(
+    PlanBridge.overInput(df)(_.filter(col("value").isNotNull).select(
       col("window_end").as("timestamp"),
       concat(lit(metricNamePrefix), col("metric")).as("metric_name"),
       col("value"),
-      col("labels"))
+      col("labels")))
 
   /** Route a (micro-)batch to per-metric sinks, constructed once per
     * partition. `strict = false` reproduces the reference's
-    * log-and-continue export policy; `true` propagates failures.
+    * log-and-continue export policy, with one `System.err` line per
+    * partition and failing sink (how many points failed, and the first
+    * error); `true` propagates the first failure.
+    *
+    * The frame's own plan is run (`PlanBridge.foreachPoint`): it is not
+    * analyzed and planned again, and its columns are read by name, so a
+    * frame with them reordered or with other columns besides is accepted.
     */
   def writeBatch(
       formatted: DataFrame,
       sinkFor: String => MetricsSink,
       strict: Boolean = false): Unit =
-    formatted.foreachPartition { (rows: Iterator[Row]) =>
+    PlanBridge.foreachPoint(formatted) { points =>
       val open = scala.collection.mutable.Map.empty[String, MetricsSink]
-      try rows.foreach { r =>
-        val p = MetricPoint(
-          r.getTimestamp(r.fieldIndex("timestamp")),
-          r.getString(r.fieldIndex("metric_name")),
-          r.getDouble(r.fieldIndex("value")),
-          r.getMap[String, String](r.fieldIndex("labels")).toMap)
+      val failed = scala.collection.mutable.LinkedHashMap.empty[String, (Long, String)]
+      try points.foreach { p =>
         val sink = open.getOrElseUpdate(p.metricName, sinkFor(p.metricName))
         try sink.write(p)
         catch {
           case e: Exception if !strict =>
-            // at-least-once: log and keep going (pipeline.py:229-233)
-            System.err.println(s"[graft-sink] export failed for ${p.metricName}: ${e.getMessage}")
+            // at-least-once: count and keep going (pipeline.py:229-233)
+            val (n, first) = failed.getOrElse(p.metricName, (0L, e.getMessage))
+            failed(p.metricName) = (n + 1, first)
         }
-      } finally open.values.foreach(_.close())
+      } finally {
+        open.values.foreach(_.close())
+        failed.foreach { case (metric, (n, first)) =>
+          System.err.println(s"[graft-sink] export failed for $n points of $metric, first: $first")
+        }
+      }
     }
 
   /** GCM CreateTimeSeriesRequest-shaped rows from a [[formatted]] frame.

@@ -4,8 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
-/** The one sanctioned crossing into Spark's `private[sql]` surface:
-  * Column ↔ Expression converters (`classic.ExpressionUtils`), needed to
+/** Column ↔ Expression converters (`classic.ExpressionUtils`), needed to
   * build a Column from an expression that the public FunctionRegistry path,
   * whose builders only receive child Expressions, cannot spell. Two
   * expressions carry such a payload:
@@ -13,9 +12,18 @@ import org.apache.spark.sql.classic.ExpressionUtils
   *  - [[ParseMessage]] (this package; ingest's parse): a Jackson factory
   *    built from `JSONOptions`, itself `private[sql]`.
   *
-  * Kept deliberately tiny (two forwarders, no logic) so the private-API
-  * contact surface is auditable in one screenful; everything else in graft
-  * uses the public DataFrame/Column API.
+  * This package is the core's one crossing into Spark's `private[sql]`
+  * surface and its internal row and plan types. Everything it offers:
+  *  - `ColumnBridge.column` and `ColumnBridge.expression`, two forwarders;
+  *  - [[ParseMessage]], ingest's one parse per message;
+  *  - [[PlanBridge.overInput]], which builds a pipeline call's steps over a
+  *    stand-in leaf so that the caller's plan is analyzed once per call;
+  *  - [[PlanBridge.foreachPoint]], which runs a formatted frame's own plan
+  *    and reads its points from Spark's internal rows, for
+  *    `MetricsSink.writeBatch`.
+  * Kept small so the private-API contact surface is auditable in a few
+  * screenfuls; everything else in graft uses the public DataFrame/Column
+  * API.
   */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)

@@ -82,6 +82,75 @@ class MetricsSinkSpec extends SparkSpec {
     collectedOk.size() // silence unused warning
   }
 
+  /** The points `writeBatch` hands its sinks, collected. */
+  private def exported(f: org.apache.spark.sql.DataFrame): Set[MetricPoint] = {
+    MetricsSinkSpec.exported.clear()
+    MetricsSink.writeBatch(f, _ => new MetricsSink {
+      def write(p: MetricPoint): Unit = MetricsSinkSpec.exported.add(p)
+    }, strict = true)
+    MetricsSinkSpec.exported.toArray(Array.empty[MetricPoint]).toSet
+  }
+
+  /** The points of `f` as `Row`s read them. */
+  private def rowPoints(f: org.apache.spark.sql.DataFrame): Set[MetricPoint] =
+    f.collect().map { r =>
+      MetricPoint(
+        r.getTimestamp(r.fieldIndex("timestamp")),
+        r.getString(r.fieldIndex("metric_name")),
+        r.getDouble(r.fieldIndex("value")),
+        r.getMap[String, String](r.fieldIndex("labels")).toMap)
+    }.toSet
+
+  test("writeBatch exports the points the Row path reads, whatever the column order") {
+    def ts(s: String) = java.sql.Timestamp.valueOf(s)
+    val f = Seq(
+      (ts("2026-01-01 00:01:00.123456"), "a", 1.5, Map("k" -> "v", "z" -> "")),
+      (ts("2026-01-01 00:02:00"), "b", -0.0, Map.empty[String, String]),
+      (ts("1500-03-01 12:00:00.000001"), "a", Double.MaxValue, Map("k" -> "w")))
+      .toDF("timestamp", "metric_name", "value", "labels")
+    val want = rowPoints(f)
+    assert(want.size == 3 && want.exists(_.timestamp.getNanos == 123456000))
+    assert(exported(f) == want)
+    assert(exported(f.select($"labels", lit(7).as("extra"), $"value", $"metric_name", $"timestamp")) == want)
+    val pipeline = MetricsSink.formatted(points(), "p/")
+    assert(exported(pipeline) == rowPoints(pipeline))
+  }
+
+  test("writeBatch runs the frame as one SQL execution: Dataset.observe delivers its metrics") {
+    import scala.concurrent.Await
+    import scala.concurrent.duration._
+    val obs = org.apache.spark.sql.Observation("written")
+    val f = MetricsSink.formatted(points())
+    val written = exported(f.observe(obs, count(lit(1)).as("n")))
+    assert(Await.result(obs.future, 60.seconds).getAs[Long]("n") == written.size)
+    assert(written.size == 2)
+  }
+
+  test("non-strict failures print one line per partition and sink; strict rethrows the first") {
+    val f = (0 until 30)
+      .map(i => (new java.sql.Timestamp(i * 1000L), "down", i.toDouble, Map("k" -> "v")))
+      .toDF("timestamp", "metric_name", "value", "labels")
+      .repartition(3)
+    val sizes = f.rdd.mapPartitions(it => Iterator(it.size)).collect().filter(_ > 0).sorted.toSeq
+    assert(sizes.size > 1)
+    val boom: String => MetricsSink = _ => new MetricsSink {
+      def write(p: MetricPoint): Unit = throw new RuntimeException(s"target down at ${p.value}")
+    }
+    val buf = new java.io.ByteArrayOutputStream
+    val saved = System.err
+    System.setErr(new java.io.PrintStream(buf, true))
+    try MetricsSink.writeBatch(f, boom)
+    finally System.setErr(saved)
+    val lines = buf.toString("UTF-8").linesIterator.filter(_.startsWith("[graft-sink]")).toSeq
+    assert(lines.size == sizes.size, lines.mkString("\n"))
+    val counts = lines.map("failed for (\\d+) points of down, first: target down at ".r.findFirstMatchIn(_))
+    assert(counts.forall(_.isDefined), lines.mkString("\n"))
+    assert(counts.map(_.get.group(1).toInt).sorted == sizes)
+
+    val e = intercept[org.apache.spark.SparkException](MetricsSink.writeBatch(f, boom, strict = true))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).exists(_.getMessage.startsWith("target down")))
+  }
+
   test("a point without a value (no row carries the field) is skipped, strict or not") {
     val df = Seq((new java.sql.Timestamp(60000L), "ERROR")).toDF("ts", "severity")
     val defs = Seq(MetricDefinition("rt_max", MetricType.Max("rt"), windowSizeSec = 60))
@@ -196,6 +265,7 @@ class MetricsSinkSpec extends SparkSpec {
 
 object MetricsSinkSpec {
   val seen: java.util.Set[String] = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  val exported = new java.util.concurrent.ConcurrentLinkedQueue[MetricPoint]()
 
   /** Throws on a configurable metric name — exercises the error policy. */
   final class FailingSink(failOn: String, underlying: MetricsSink) extends MetricsSink {
