@@ -27,32 +27,35 @@ object PlanBridge {
     * place and the whole is analyzed by `Dataset.ofRows`, with every
     * analyzer and check rule, so a cached `df` is still read from its cache.
     *
-    * An input that already is an empty `LocalRelation` (a set-up plan over
-    * no data) serves as its own stand-in: the steps are built over it as
-    * they are, and analyzing them once more would only cost time.
+    * An input over no data, whose every leaf is an empty `LocalRelation`
+    * (a set-up plan), is small: the steps are applied to `df` as they are,
+    * since the stand-in's one more analysis would only cost time there.
     *
-    * The steps must read their input exactly once. A step that copies the
-    * leaf (a self-join, which `DeduplicateRelations` rewrites with new
-    * attribute ids) or reads it inside a subquery would otherwise run on an
-    * empty relation, so it fails here instead.
+    * Over the stand-in, the steps must read their input exactly once. A
+    * step that copies the leaf (a self-join, which `DeduplicateRelations`
+    * rewrites with new attribute ids) or reads it inside a subquery would
+    * otherwise run on an empty relation, so it fails here instead.
     */
   def overInput(df: DataFrame)(steps: DataFrame => DataFrame): DataFrame = {
-    val session = df.sparkSession.asInstanceOf[SparkSession]
     val input = df.queryExecution.analyzed
-    val leaf = input match {
-      case l: LocalRelation if l.data.isEmpty => l
-      case _ => LocalRelation(input.output, Nil, df.isStreaming)
+    val noData = input.collectLeaves().forall {
+      case l: LocalRelation => l.data.isEmpty
+      case _ => false
     }
-    val result = steps(if (leaf eq input) df else Dataset.ofRows(session, leaf))
-    val built = result.queryExecution.analyzed
-    val reads = built.collectWithSubqueries {
-      case l: LocalRelation if l.data.isEmpty && l.schema == leaf.schema && l.isStreaming == leaf.isStreaming => l
-    }.size
-    var replaced = 0
-    val plan = built.transformUp { case l if l eq leaf => replaced += 1; input }
-    require(reads == 1 && replaced == 1,
-      s"the steps must read their input exactly once, as it is: found $reads reads and $replaced in place")
-    if (leaf eq input) result else Dataset.ofRows(session, plan)
+    if (noData) steps(df)
+    else {
+      val session = df.sparkSession.asInstanceOf[SparkSession]
+      val leaf = LocalRelation(input.output, Nil, df.isStreaming)
+      val built = steps(Dataset.ofRows(session, leaf)).queryExecution.analyzed
+      val reads = built.collectWithSubqueries {
+        case l: LocalRelation if l.data.isEmpty && l.schema == leaf.schema && l.isStreaming == leaf.isStreaming => l
+      }.size
+      var replaced = 0
+      val plan = built.transformUp { case l if l eq leaf => replaced += 1; input }
+      require(reads == 1 && replaced == 1,
+        s"the steps must read their input exactly once, as it is: found $reads reads and $replaced in place")
+      Dataset.ofRows(session, plan)
+    }
   }
 
   /** Runs `formatted`'s own executed plan, as one SQL execution (so

@@ -87,19 +87,23 @@ class PlanBridgeSpec extends SparkSpec {
     assert(viaLeaf(stream).isStreaming)
   }
 
-  test("an empty local relation is its own stand-in: same plan, built once") {
+  test("an input over no data is built as it is; one over local rows takes the stand-in") {
     val empty = spark.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](), plain.schema)
-    val input = empty.queryExecution.analyzed
-    var seen: LogicalPlan = null
-    val built = PlanBridge.overInput(empty) { in => seen = in.queryExecution.analyzed; steps(in) }
-    assert(seen eq input)
-    samePlan(empty, PlanBridge.overInput(_)(steps))
-    assert(built.collect().isEmpty)
+    for (noData <- Seq(empty, empty.filter($"x" > 0).withColumn("x", $"x" + 1))) {
+      val input = noData.queryExecution.analyzed
+      var seen: LogicalPlan = null
+      val built = PlanBridge.overInput(noData) { in => seen = in.queryExecution.analyzed; steps(in) }
+      assert(seen eq input)
+      samePlan(noData, PlanBridge.overInput(_)(steps))
+      assert(built.collect().isEmpty)
+    }
+    val local = Seq((1L, 2L), (2L, 5L)).toDF("k", "x")
+    samePlan(local)
+    assert(viaLeaf(local).collect().toSet == steps(local).collect().toSet)
   }
 
   test("steps that do not read their input exactly once, as it is, fail when built") {
-    val empty = spark.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](), plain.schema)
-    for (input <- Seq(plain, empty)) {
+    for (input <- Seq(plain, Seq((1L, 2L)).toDF("k", "x"))) {
       def rejected(bad: DataFrame => DataFrame): Unit = {
         val e = intercept[IllegalArgumentException](PlanBridge.overInput(input)(bad))
         assert(e.getMessage.contains("the steps must read their input exactly once"), e.getMessage)
