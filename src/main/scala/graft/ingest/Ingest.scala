@@ -89,8 +89,9 @@ object Ingest {
     * `MapType(String, String)` — mirrors the reference's untyped
     * `msg.get(field)` access (SURVEY.md §1.3). Malformed/undecodable rows
     * are dropped ([[parseMessage]] ⇒ null for broken documents). Both
-    * steps are built over a stand-in for `df` (`PlanBridge.overInput`),
-    * so `df`'s plan is analyzed once, not once per step.
+    * steps are built through `PlanBridge.overInput`, so a `df` whose plan
+    * holds many local rows or a long lineage is analyzed once, not once
+    * per step.
     */
   def parseSchemaless(df: DataFrame, rawCol: String, msgCol: String = "msg"): DataFrame =
     PlanBridge.overInput(df)(

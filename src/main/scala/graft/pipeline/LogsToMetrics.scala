@@ -51,9 +51,10 @@ import org.apache.spark.sql.types._
   *    definition family (the reference sorts label tuples at runtime per
   *    element, pipeline.py:172) and the output map is built in key order.
   *  - The plan is built once per call, as the reference builds its graph
-  *    once (pipeline.py:164-186): the batch transform's dozen DataFrame
-  *    steps are built over a stand-in for the input, and the input's plan,
-  *    however large, is analyzed with them once (`PlanBridge.overInput`).
+  *    once (pipeline.py:164-186): over an input whose plan holds many local
+  *    rows or a long lineage, the batch transform's dozen DataFrame steps
+  *    are built over a stand-in for it, and the input's plan is analyzed
+  *    with them once (`PlanBridge.overInput`).
   *
   * Value semantics (pipeline.py:200-208): COUNT ⇒ 1.0 per row; SUM ⇒
   * `float(msg.get(field, 0))`, missing field ⇒ 0. Divergence (documented,
@@ -416,8 +417,8 @@ object LogsToMetrics {
   }
 
   /** The batch transform: the OR gate, then [[FanOut.points]]. Its steps
-    * are built over a stand-in for `df` (`PlanBridge.overInput`), so
-    * `df`'s plan is analyzed once, not once per step.
+    * are built through `PlanBridge.overInput`, so a `df` whose plan holds
+    * many local rows or a long lineage is analyzed once, not once per step.
     */
   def apply(defs: Seq[MetricDefinition], mode: Mode, tsCol: String = "ts")(
       df: DataFrame): DataFrame = {

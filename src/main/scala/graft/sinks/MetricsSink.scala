@@ -2,8 +2,10 @@ package graft.sinks
 
 import graft.model.ExportTarget
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
+import org.apache.spark.sql.types.{DoubleType, MapType, StringType, TimestampType}
 
 /** Export layer — re-expresses the reference's exporter stack
   * (/root/reference/beametrics/metrics_exporter.py:65-220,
@@ -66,8 +68,9 @@ object MetricsSink {
     * point rows (`window_end` is the reference's point timestamp — the
     * window close). A point without a value — a min/max/avg group whose
     * rows all lack the field — is dropped here, so no export path
-    * reads a null `value`. Built over a stand-in for `df`
-    * (`PlanBridge.overInput`), so `df`'s plan is analyzed once.
+    * reads a null `value`. Built through `PlanBridge.overInput`, so a
+    * `df` whose plan holds many local rows or a long lineage is analyzed
+    * once, not per step.
     */
   def formatted(df: DataFrame, metricNamePrefix: String = ""): DataFrame =
     PlanBridge.overInput(df)(_.filter(col("value").isNotNull).select(
@@ -80,20 +83,38 @@ object MetricsSink {
     * partition. `strict = false` reproduces the reference's
     * log-and-continue export policy, with one `System.err` line per
     * partition and failing sink (how many points failed, and the first
-    * error); `true` propagates the first failure.
+    * error), printed before the sinks close; `true` propagates the first
+    * failure.
     *
-    * The frame's own plan is run (`PlanBridge.foreachPoint`): it is not
-    * analyzed and planned again, and its columns are read by name, so a
-    * frame with them reordered or with other columns besides is accepted.
+    * The frame's own plan is run (`PlanBridge.foreachInternalPartition`):
+    * it is not analyzed and planned again, and each point is read from
+    * Spark's internal row at ordinals found by name once, so a frame with
+    * its columns reordered or with other columns besides is accepted.
     */
   def writeBatch(
       formatted: DataFrame,
       sinkFor: String => MetricsSink,
-      strict: Boolean = false): Unit =
-    PlanBridge.foreachPoint(formatted) { points =>
+      strict: Boolean = false): Unit = {
+    val schema = formatted.schema
+    val Seq(ts, name, value, labels) =
+      Seq("timestamp", "metric_name", "value", "labels").map(schema.fieldIndex)
+    require(Seq(ts, name, value, labels).map(schema(_).dataType) match {
+      case Seq(TimestampType, StringType, DoubleType, MapType(StringType, StringType, _)) => true
+      case _ => false
+    }, s"not a formatted point frame: $schema")
+    PlanBridge.foreachInternalPartition(formatted) { rows =>
       val open = scala.collection.mutable.Map.empty[String, MetricsSink]
       val failed = scala.collection.mutable.LinkedHashMap.empty[String, (Long, String)]
-      try points.foreach { p =>
+      try rows.foreach { r =>
+        val ls = r.getMap(labels)
+        val (ks, vs) = (ls.keyArray(), ls.valueArray())
+        val p = MetricPoint(
+          DateTimeUtils.toJavaTimestamp(r.getLong(ts)),
+          r.getUTF8String(name).toString,
+          r.getDouble(value),
+          (0 until ls.numElements()).map { j =>
+            ks.getUTF8String(j).toString -> (if (vs.isNullAt(j)) null else vs.getUTF8String(j).toString)
+          }.toMap)
         val sink = open.getOrElseUpdate(p.metricName, sinkFor(p.metricName))
         try sink.write(p)
         catch {
@@ -103,12 +124,13 @@ object MetricsSink {
             failed(p.metricName) = (n + 1, first)
         }
       } finally {
-        open.values.foreach(_.close())
         failed.foreach { case (metric, (n, first)) =>
           System.err.println(s"[graft-sink] export failed for $n points of $metric, first: $first")
         }
+        open.values.foreach(_.close())
       }
     }
+  }
 
   /** GCM CreateTimeSeriesRequest-shaped rows from a [[formatted]] frame.
     * Reference quirk preserved (metrics_exporter.py:76-78,104-111): the

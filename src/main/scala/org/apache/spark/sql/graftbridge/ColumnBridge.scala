@@ -13,17 +13,18 @@ import org.apache.spark.sql.classic.ExpressionUtils
   *    built from `JSONOptions`, itself `private[sql]`.
   *
   * This package is the core's one crossing into Spark's `private[sql]`
-  * surface and its internal row and plan types. Everything it offers:
+  * surface and its logical plans. Everything it offers:
   *  - `ColumnBridge.column` and `ColumnBridge.expression`, two forwarders;
   *  - [[ParseMessage]], ingest's one parse per message;
-  *  - [[PlanBridge.overInput]], which builds a pipeline call's steps over a
-  *    stand-in leaf so that the caller's plan is analyzed once per call;
-  *  - [[PlanBridge.foreachPoint]], which runs a formatted frame's own plan
-  *    and reads its points from Spark's internal rows, for
+  *  - [[PlanBridge.overInput]] and [[PlanBridge.overStandIn]], which build
+  *    a pipeline call's steps over a stand-in leaf so that the caller's
+  *    plan is analyzed once per call;
+  *  - [[PlanBridge.foreachInternalPartition]], which runs a frame's own
+  *    plan and hands over Spark's internal rows, for
   *    `MetricsSink.writeBatch`.
   * Kept small so the private-API contact surface is auditable in a few
   * screenfuls; everything else in graft uses the public DataFrame/Column
-  * API.
+  * API, apart from `writeBatch`'s reads of the internal rows it is handed.
   */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)

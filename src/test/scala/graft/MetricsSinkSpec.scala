@@ -136,19 +136,36 @@ class MetricsSinkSpec extends SparkSpec {
     val boom: String => MetricsSink = _ => new MetricsSink {
       def write(p: MetricPoint): Unit = throw new RuntimeException(s"target down at ${p.value}")
     }
-    val buf = new java.io.ByteArrayOutputStream
-    val saved = System.err
-    System.setErr(new java.io.PrintStream(buf, true))
-    try MetricsSink.writeBatch(f, boom)
-    finally System.setErr(saved)
-    val lines = buf.toString("UTF-8").linesIterator.filter(_.startsWith("[graft-sink]")).toSeq
+    /** The `[graft-sink]` lines `run` prints, and what it throws. */
+    def logged(run: => Unit): (Seq[String], Option[Throwable]) = {
+      val buf = new java.io.ByteArrayOutputStream
+      val saved = System.err
+      System.setErr(new java.io.PrintStream(buf, true))
+      val thrown = try { run; None } catch { case e: Exception => Some(e) } finally System.setErr(saved)
+      (buf.toString("UTF-8").linesIterator.filter(_.startsWith("[graft-sink]")).toSeq, thrown)
+    }
+    def causes(e: Option[Throwable]) =
+      e.toSeq.flatMap(Iterator.iterate(_)(_.getCause).takeWhile(_ != null)).map(_.getMessage)
+    val failedCount = "failed for (\\d+) points of down, first: target down at ".r
+
+    val (lines, thrown) = logged(MetricsSink.writeBatch(f, boom))
+    assert(thrown.isEmpty, thrown)
     assert(lines.size == sizes.size, lines.mkString("\n"))
-    val counts = lines.map("failed for (\\d+) points of down, first: target down at ".r.findFirstMatchIn(_))
+    val counts = lines.map(failedCount.findFirstMatchIn(_))
     assert(counts.forall(_.isDefined), lines.mkString("\n"))
     assert(counts.map(_.get.group(1).toInt).sorted == sizes)
 
-    val e = intercept[org.apache.spark.SparkException](MetricsSink.writeBatch(f, boom, strict = true))
-    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).exists(_.getMessage.startsWith("target down")))
+    // a sink whose close throws fails the job, after its partition's summary is printed
+    val (closing, closeErr) = logged(MetricsSink.writeBatch(f.coalesce(1), _ => new MetricsSink {
+      def write(p: MetricPoint): Unit = throw new RuntimeException(s"target down at ${p.value}")
+      override def close(): Unit = throw new RuntimeException("flush failed")
+    }))
+    assert(causes(closeErr).exists(m => m != null && m.startsWith("flush failed")), closeErr)
+    assert(closing.flatMap(failedCount.findFirstMatchIn(_)).map(_.group(1).toInt) == Seq(30), closing.mkString("\n"))
+
+    val (_, strictErr) = logged(MetricsSink.writeBatch(f, boom, strict = true))
+    assert(strictErr.exists(_.isInstanceOf[org.apache.spark.SparkException]), strictErr)
+    assert(causes(strictErr).exists(m => m != null && m.startsWith("target down")), strictErr)
   }
 
   test("a point without a value (no row carries the field) is skipped, strict or not") {

@@ -8,9 +8,10 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-/** `PlanBridge.overInput`: steps built over a stand-in leaf, with the
+/** `PlanBridge.overStandIn`: steps built over a stand-in leaf, with the
   * caller's plan put back in its place, give the plan the steps give when
-  * applied to the caller's frame directly.
+  * applied to the caller's frame directly. `PlanBridge.overInput` takes
+  * that path only over an input holding many local rows or a long lineage.
   */
 class PlanBridgeSpec extends SparkSpec {
   import spark.implicits._
@@ -30,13 +31,13 @@ class PlanBridgeSpec extends SparkSpec {
 
   private def plain: DataFrame = spark.range(0, 20).select(($"id" % 3).as("k"), $"id".as("x"))
 
-  /** `overInput(df)(steps)`, checking that the steps see only a stand-in
+  /** `overStandIn(df)(steps)`, checking that the steps see only a stand-in
     * for `df`: an empty relation with `df`'s output, and no node of its plan.
     */
   private def viaLeaf(df: DataFrame): DataFrame = {
     val input = df.queryExecution.analyzed
     val inputNodes = input.collect { case n => n }
-    PlanBridge.overInput(df) { in =>
+    PlanBridge.overStandIn(df) { in =>
       val seen = in.queryExecution.analyzed
       seen match {
         case l: LocalRelation =>
@@ -87,25 +88,31 @@ class PlanBridgeSpec extends SparkSpec {
     assert(viaLeaf(stream).isStreaming)
   }
 
-  test("an input over no data is built as it is; one over local rows takes the stand-in") {
+  test("overInput takes the stand-in only over more than StandInRows local rows or StandInNodes operators") {
+    val n = PlanBridge.StandInRows
     val empty = spark.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](), plain.schema)
-    for (noData <- Seq(empty, empty.filter($"x" > 0).withColumn("x", $"x" + 1))) {
-      val input = noData.queryExecution.analyzed
+    val few = (0L until n).map(i => (i % 3, i)).toDF("k", "x")
+    val many = (0L to n).map(i => (i % 3, i)).toDF("k", "x")
+    def lineage(ops: Int) = (1 to ops).foldLeft(plain)((d, k) => d.filter($"x" > -k))
+    val (short, long) = (lineage(PlanBridge.StandInNodes - 2), lineage(PlanBridge.StandInNodes - 1))
+    assert(short.queryExecution.analyzed.collect { case p => p }.size == PlanBridge.StandInNodes)
+    val cached = many.filter($"x" > 0).cache()
+    try for ((input, standIn) <- Seq(plain -> false, empty -> false, few -> false, short -> false,
+        few.union(few) -> true, many -> true, cached -> true, long -> true)) {
+      val analyzed = input.queryExecution.analyzed
       var seen: LogicalPlan = null
-      val built = PlanBridge.overInput(noData) { in => seen = in.queryExecution.analyzed; steps(in) }
-      assert(seen eq input)
-      samePlan(noData, PlanBridge.overInput(_)(steps))
-      assert(built.collect().isEmpty)
-    }
-    val local = Seq((1L, 2L), (2L, 5L)).toDF("k", "x")
-    samePlan(local)
-    assert(viaLeaf(local).collect().toSet == steps(local).collect().toSet)
+      val built = PlanBridge.overInput(input) { in => seen = in.queryExecution.analyzed; steps(in) }
+      if (standIn) assert(seen.isInstanceOf[LocalRelation] && seen.children.isEmpty && !(seen eq analyzed))
+      else assert(seen eq analyzed)
+      samePlan(input, PlanBridge.overInput(_)(steps))
+      assert(built.collect().toSet == steps(input).collect().toSet)
+    } finally cached.unpersist()
   }
 
   test("steps that do not read their input exactly once, as it is, fail when built") {
     for (input <- Seq(plain, Seq((1L, 2L)).toDF("k", "x"))) {
       def rejected(bad: DataFrame => DataFrame): Unit = {
-        val e = intercept[IllegalArgumentException](PlanBridge.overInput(input)(bad))
+        val e = intercept[IllegalArgumentException](PlanBridge.overStandIn(input)(bad))
         assert(e.getMessage.contains("the steps must read their input exactly once"), e.getMessage)
       }
       rejected(in => in.join(in, Seq("k"))) // a self-join copies the leaf
